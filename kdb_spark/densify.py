@@ -45,8 +45,9 @@ def time_spine(
     """
     n = max(0, (end - start) // resolution)
     parts = max(1, min(spark.sparkContext.defaultParallelism, (n + 65535) // 65536))
-    return spark.range(0, n, 1, parts).select(
-        (F.lit(start) + F.col("id") * F.lit(resolution)).cast("long").alias(ts_col)
+    # one SQL expression: each Column call is a py4j round trip
+    return spark.range(0, n, 1, parts).selectExpr(
+        f"CAST({start} + id * {resolution} AS BIGINT) AS {ts_col}"
     )
 
 

@@ -29,13 +29,20 @@ Semantics reproduced exactly (golden-tested in tests/test_store.py):
 Scale posture: reads never collect; the dense grid is produced by a
 distributed spine (see densify.py); writes append partitioned parquet (on a
 cluster this would be exactly the same code against object storage, with the
-hot path fed by Structured Streaming — kdb_spark/streaming.py).
+hot path fed by Structured Streaming — kdb_spark/streaming.py). No verb pays
+a fixed Spark cost unrelated to its data: reads take their schema from the
+config (checked once against a part-file footer at open) and list only the
+bucket dirs their range touches, so building a read DataFrame launches no
+job; tuple puts reach the JVM as one Arrow table, so the write job is the
+batch's only job and runs no Python worker.
 """
 
 from __future__ import annotations
 
 import fcntl
+import functools
 import json
+import operator
 import os
 import shutil
 from collections.abc import Iterable
@@ -71,40 +78,87 @@ class TimeSeriesStore:
         self._hot_df: DataFrame | None = None
         self._hot_min: int | None = None
         self._recover()
+        self._check_files_match_config()
 
     # ------------------------------------------------------------------ schema
 
     @property
-    def schema(self) -> T.StructType:
+    def file_schema(self) -> T.StructType:
+        """The columns of every part file."""
         fields = [T.StructField("ts", T.LongType(), False)]
         fields += [T.StructField(c, T.StringType(), False) for c in self.config.tag_cols]
         fields += [
             T.StructField("payload", T.BinaryType(), False),
             T.StructField("ingest_seq", T.LongType(), False),
             T.StructField("row_seq", T.LongType(), False),
-            T.StructField("bucket_ts", T.LongType(), False),
         ]
         return T.StructType(fields)
 
-    def _data_dir_nonempty(self) -> bool:
-        # a bucket dir holding only hidden (un-committed / mid-publish) parts
-        # does not count — Spark's file index ignores `_`/`.` files and would
-        # fail schema inference on an all-hidden tree
-        for e in os.scandir(self.path):
-            if e.name.startswith("bucket_ts="):
-                for p in os.scandir(e.path):
-                    if not p.name.startswith(("_", ".")):
-                        return True
-        return False
+    @property
+    def schema(self) -> T.StructType:
+        """A read's columns: the file columns plus the partition column."""
+        return self.file_schema.add("bucket_ts", T.LongType(), False)
 
-    def _read(self) -> DataFrame:
-        # finish any committed-but-unpublished batch first, so a reader never
-        # observes a torn batch after a mid-publish crash (see _commit_staging)
-        self._replay_pending_manifests()
-        if not self._data_dir_nonempty():
-            return self.spark.createDataFrame([], self.schema)
-        # basePath keeps bucket_ts as a real (pruning) partition column
-        return self.spark.read.option("basePath", self.path).parquet(self.path)
+    def _bucket_dir(self, base: int) -> str:
+        return os.path.join(self.path, f"bucket_ts={base}")
+
+    def _buckets(self) -> list[int]:
+        """Bases of the bucket partitions a reader sees, ascending.
+
+        A bucket dir holding only hidden (un-committed / mid-publish) parts
+        does not count: Spark's file index skips `_`/`.` names, so reading
+        it would yield nothing.
+        """
+        out = []
+        for e in os.listdir(self.path):
+            if e.startswith("bucket_ts=") and any(
+                not p.startswith(("_", ".")) for p in os.listdir(os.path.join(self.path, e))
+            ):
+                out.append(int(e.split("=", 1)[1]))
+        return sorted(out)
+
+    def _read(self, buckets: list[int]) -> DataFrame:
+        """Rows of the given bucket partitions, or an empty relation when
+        there are none (Catalyst folds ``limit 0`` away: no scan, no job).
+
+        The schema is the store's own, never inferred, and only the listed
+        bucket dirs are listed — building the DataFrame runs no Spark job.
+        basePath keeps ``bucket_ts`` a real partition column.
+        """
+        if not buckets:
+            return self.spark.range(0).select(
+                *[F.lit(None).cast(f.dataType).alias(f.name) for f in self.schema]
+            ).limit(0)
+        return (
+            self.spark.read.schema(self.schema)
+            .option("basePath", self.path)
+            .parquet(*[self._bucket_dir(b) for b in buckets])
+        )
+
+    def _check_files_match_config(self) -> None:
+        """With the schema taken from the config, data written under another
+        config (e.g. a different ``index_depth``) would read its missing tag
+        columns as null — silent zeros. Compare one visible part file's
+        parquet footer with the config's columns instead (pyarrow reads the
+        footer directly: no Spark job)."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        buckets = self._buckets()
+        if not buckets:
+            return
+        d = self._bucket_dir(buckets[0])
+        part = min(p for p in os.listdir(d) if not p.startswith(("_", ".")))
+        got = pq.read_schema(os.path.join(d, part))
+        want = to_arrow_schema(self.file_schema)
+        # earlier versions wrote ingest_seq as int32; the reader widens it
+        widened = [pa.int64() if t == pa.int32() else t for t in got.types]
+        if got.names != want.names or widened != want.types:
+            raise ValidationError(
+                f"{d}/{part} has columns {got.names} ({got.types}), the config "
+                f"{want.names} ({want.types}); reopen with the config it was written under"
+            )
 
     # ------------------------------------------------------------------ ingest
 
@@ -164,24 +218,20 @@ class TimeSeriesStore:
         ``rows``: DataFrame (or iterable of tuples) with columns
         ``(ts, tag1..tagN, payload)``. Raises on ANY invalid row, mirroring
         the per-call errors of `dbase/dbase.go:125-159`. Returns rows written.
+
+        Tuples become one Arrow table, which the JVM decodes: the write is
+        the batch's only Spark job and no Python worker runs in it. Arrow
+        batches become partitions in input order, so the partition-major
+        ``row_seq`` still follows the batch's row order.
         """
         cfg = self.config
         if not isinstance(rows, DataFrame):
-            base = T.StructType(
-                [T.StructField("ts", T.LongType(), False)]
-                + [T.StructField(c, T.StringType(), True) for c in cfg.tag_cols]
-                + [T.StructField("payload", T.BinaryType(), True)]
-            )
-            rows = self.spark.createDataFrame(list(rows), base)
+            rows = self._tuples_df(rows)
 
         expected = ["ts", *cfg.tag_cols, "payload"]
         missing = [c for c in expected if c not in rows.columns]
         if missing:
             raise ValidationError(f"missing columns: {missing} (tag arity is fixed, dbase.go:134-136)")
-
-        df = rows.select(*expected).withColumn(
-            "ts", F.col("ts") - F.col("ts") % F.lit(cfg.resolution)  # dbase.go:127
-        )
 
         # Single-pass validate-and-write: the write job carries an
         # `observe()` metric counting every violation class, landing in a
@@ -192,54 +242,50 @@ class TimeSeriesStore:
         # nondeterministic source.
         from pyspark.sql import Observation
 
-        bad_tag = F.lit(False)
-        for c in cfg.tag_cols:
-            bad_tag = bad_tag | F.col(c).isNull() | (F.col(c) == "")  # dbase.go:138-142
         hot_min = cfg.hot_min_base(now)
-
         batch = self._next_batch_seq()
-        out = (
-            df.withColumn("ingest_seq", F.lit(int(batch)))
+        out = rows.selectExpr(
+            f"ts - ts % {cfg.resolution} AS ts",  # dbase.go:127
+            *cfg.tag_cols,
+            "payload",
+            f"CAST({batch} AS BIGINT) AS ingest_seq",
             # Intra-batch tiebreak: full 64-bit monotonically_increasing_id
             # (partition-major, row-minor — the batch's row order). No modulo,
             # so no aliasing at >=128 partitions; LWW ranks by
             # struct(ingest_seq, row_seq), see `_lww`.
-            .withColumn("row_seq", F.monotonically_increasing_id())
-            .withColumn(
-                "bucket_ts", F.col("ts") - F.col("ts") % F.lit(cfg.bucket_duration)
-            )
+            "monotonically_increasing_id() AS row_seq",
+            # the input ts: the resolution divides the bucket width, so
+            # flooring it first gives the same bucket
+            f"ts - ts % {cfg.bucket_duration} AS bucket_ts",
         )
+        bad_tag = " OR ".join(f"{c} IS NULL OR {c} = ''" for c in cfg.tag_cols)
         obs = Observation()
-        out = out.observe(
-            obs,
-            F.sum(F.when(F.col("ts") > F.lit(now), 1).otherwise(0)).alias("future"),
-            F.sum(F.when(bad_tag, 1).otherwise(0)).alias("bad_tag"),
-            F.sum(
-                F.when(
-                    F.col("payload").isNull()
-                    | (F.length(F.col("payload")) != cfg.payload_size),
-                    1,
-                ).otherwise(0)
-            ).alias("bad_payload"),
-            F.sum(
-                F.when(F.col("bucket_ts") < F.lit(hot_min), 1).otherwise(0)
-            ).alias("cold"),
-            F.count(F.lit(1)).alias("n"),
-        )
+        out = out.observe(obs, *[F.expr(e) for e in (
+            "count_if(ts IS NULL) AS null_ts",
+            f"count_if(ts > {now}) AS future",  # dbase.go:129-132
+            f"count_if({bad_tag}) AS bad_tag",  # dbase.go:138-142
+            f"count_if(payload IS NULL OR length(payload) != {cfg.payload_size}) AS bad_payload",
+            f"count_if(bucket_ts < {hot_min}) AS cold",  # dbucket.go:120-122
+            "count(1) AS n",
+        )])
 
         staging = os.path.join(self.path, f"_staging_batch_{batch}")
         # Layout: cluster each bucket's files by (tags, ts) so parquet
         # row-group min/max stats make tag-equality + ts-range reads
         # skippable — the stats-level analog of the reference's prefix-tree
-        # descent (SURVEY §7.6). Local sort only, no extra shuffle.
+        # descent (SURVEY §7.6). Local sort only, no extra shuffle. It leads
+        # with bucket_ts, the partitioned writer's required ordering: a sort
+        # without it is replaced by a bucket_ts-only sort, unclustered.
         (
-            out.sortWithinPartitions(*cfg.tag_cols, "ts")
+            out.sortWithinPartitions("bucket_ts", *cfg.tag_cols, "ts")
             .write.mode("overwrite")
             .partitionBy("bucket_ts")
             .parquet(staging)
         )
         counts = obs.get
         try:
+            if counts["null_ts"]:
+                raise ValidationError(f"{counts['null_ts']} rows with null ts")
             if counts["future"]:
                 raise FutureTimestampError(
                     f"{counts['future']} rows with ts > now={now} (dbase.go:129-132)"
@@ -263,6 +309,37 @@ class TimeSeriesStore:
             if os.path.exists(staging):
                 shutil.rmtree(staging)
         return int(counts["n"] or 0)
+
+    def _tuples_df(self, rows: Iterable[tuple]) -> DataFrame:
+        """Tuple rows as a DataFrame over one Arrow table (see put_batch)."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        cfg = self.config
+        base = T.StructType(
+            [T.StructField("ts", T.LongType(), True)]
+            + [T.StructField(c, T.StringType(), True) for c in cfg.tag_cols]
+            + [T.StructField("payload", T.BinaryType(), True)]
+        )
+        rows = list(rows)
+        if any(len(r) != len(base) for r in rows):
+            raise ValidationError(
+                f"rows must be (ts, {', '.join(cfg.tag_cols)}, payload) tuples "
+                "(tag arity is fixed, dbase.go:134-136)"
+            )
+        cols = list(zip(*rows)) or [()] * len(base)
+        # Arrow would take a str payload as its UTF-8 bytes; the reference
+        # takes only []byte (dbase.go:144-146)
+        if not all(isinstance(p, (bytes, bytearray)) for p in cols[-1]):
+            raise ValidationError("payloads must be bytes (dbase.go:144-146)")
+        arrow = to_arrow_schema(base)
+        try:
+            table = pa.Table.from_arrays(
+                [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+            )
+        except (pa.ArrowInvalid, pa.ArrowTypeError) as e:
+            raise ValidationError(f"row values do not fit {base.simpleString()}: {e}") from e
+        return self.spark.createDataFrame(table, base)
 
     def _manifest_path(self, batch: int) -> str:
         return os.path.join(self.path, f"_batch_{batch}.manifest.json")
@@ -374,34 +451,31 @@ class TimeSeriesStore:
             self._hot_df = None
         self._hot_min = None
 
-    def _hot_window_df(self, now: int) -> DataFrame | None:
+    def _hot_window_df(self, now: int, buckets: list[int]) -> DataFrame | None:
         """Pinned hot window — the cache tier the reference mmaps+mlocks
         (`dblock/dblock.go:283-293`; two-tier policy `dbase/dbase.go:83-114`).
 
         The last ``max_hot_buckets`` bucket partitions are persisted
         (memory, spilling to local disk) so the write-hot range — which
         serves most point reads in a live store — is re-read from executor
-        memory instead of parquet. Invalidated on ingest/retention/compact
-        (file set changed) and rebuilt when the hot window slides. Returns
-        None when caching is off or the store is empty.
+        memory instead of parquet. ``buckets`` is the store's current
+        directory scan; only its hot buckets are listed and read, so the
+        (lazy) rebuild runs no Spark job. Invalidated on
+        ingest/retention/compact (file set changed) and rebuilt when the hot
+        window slides. Returns None when caching is off or no hot bucket
+        holds data.
         """
         if not self.hot_cache_enabled:
             return None
         hot_min = self.config.hot_min_base(now)
         if self._hot_df is None or self._hot_min != hot_min:
             self._invalidate_hot_cache()
-            self._replay_pending_manifests()
-            if not self._data_dir_nonempty():
+            hot = [b for b in buckets if b >= hot_min]
+            if not hot:
                 return None
             from pyspark import StorageLevel
 
-            df = (
-                self.spark.read.option("basePath", self.path)
-                .parquet(self.path)
-                .filter(F.col("bucket_ts") >= F.lit(hot_min))
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            self._hot_df = df
+            self._hot_df = self._read(hot).persist(StorageLevel.MEMORY_AND_DISK)
             self._hot_min = hot_min
         return self._hot_df
 
@@ -409,8 +483,9 @@ class TimeSeriesStore:
         self, start: int, end: int, now: int, *, include_end_bucket: bool = False
     ) -> DataFrame:
         """Rows of buckets overlapping [start, end) — the bucket loop
-        (`dbase/dbase.go:177-188`) as a partition-pruning filter, served
-        from the pinned hot tier where the range overlaps it.
+        (`dbase/dbase.go:177-188`) over the bucket dirs that hold data,
+        served from the pinned hot tier where the range overlaps it. A tier
+        with no bucket in range is left out of the plan, not unioned empty.
 
         ``include_end_bucket`` mirrors the reference's ``find`` loop bound
         ``t <= end - end%BucketDuration`` (`dbase/dbase.go:247,256`): when
@@ -423,14 +498,22 @@ class TimeSeriesStore:
         b1 = cfg.floor_to_bucket(end) if include_end_bucket else cfg.floor_to_bucket(
             max(start, end - 1)
         )
-        in_range = (F.col("bucket_ts") >= F.lit(b0)) & (F.col("bucket_ts") <= F.lit(b1))
-        hot = self._hot_window_df(now) if b1 >= cfg.hot_min_base(now) else None
+        # finish any committed-but-unpublished batch first, so a reader never
+        # observes a torn batch after a mid-publish crash (see _commit_staging)
+        self._replay_pending_manifests()
+        buckets = self._buckets()
+        in_range = [b for b in buckets if b0 <= b <= b1]
+        hot_min = cfg.hot_min_base(now)
+        hot = None
+        if in_range and in_range[-1] >= hot_min:
+            hot = self._hot_window_df(now, buckets)
         if hot is None:
-            return self._read().filter(in_range)
+            return self._read(in_range)
         # cold tier from parquet, hot tier from the pinned cache; the two
         # partition sets are disjoint by construction
-        cold = self._read().filter(F.col("bucket_ts") < F.lit(self._hot_min))
-        return cold.unionByName(hot).filter(in_range)
+        hot = hot.filter(f"bucket_ts BETWEEN {b0} AND {b1}")
+        cold = [b for b in in_range if b < hot_min]
+        return self._read(cold).unionByName(hot) if cold else hot
 
     def _lww(self, df: DataFrame) -> DataFrame:
         """Last-write-wins visibility per (series, slot) (`dblock/dblock.go:198-205`).
@@ -441,7 +524,7 @@ class TimeSeriesStore:
         """
         tag_cols = list(self.config.tag_cols)
         return df.groupBy(*tag_cols, "ts").agg(
-            F.max_by("payload", F.struct("ingest_seq", "row_seq")).alias("payload")
+            F.expr("max_by(payload, struct(ingest_seq, row_seq)) AS payload")
         )
 
     def get(
@@ -481,15 +564,12 @@ class TimeSeriesStore:
         # below matches nothing, producing the same dense zero grid.
         self._check_tags(tags)
 
-        cond = F.lit(True)
+        cond = F.expr(f"ts >= {start} AND ts < {end}")
         for c, v in zip(cfg.tag_cols, tags):
-            cond = cond & (F.col(c) == F.lit(v))
-        data = (
-            self._pruned(start, end, now)
-            .filter(cond & (F.col("ts") >= start) & (F.col("ts") < end))
-        )
+            cond = cond & (F.col(c) == v)
         if as_of is not None:
-            data = data.filter(F.col("ingest_seq") <= int(as_of))
+            cond = cond & F.expr(f"ingest_seq <= {int(as_of)}")
+        data = self._pruned(start, end, now).filter(cond)
         lww = self._lww(data).select("ts", "payload")
         spine = time_spine(self.spark, start, end, cfg.resolution)
         return densify(
@@ -521,19 +601,18 @@ class TimeSeriesStore:
             raise RangeError(f"invalid range [{start},{end}) vs now={now} (dbase.go:238-241)")
         self._check_tags(tags)
 
-        cond = F.lit(True)
-        for c, v in zip(cfg.tag_cols, tags):
-            if v not in (WILDCARD, None):
-                cond = cond & (F.col(c) == F.lit(v))
+        conds = [F.col(c) == v for c, v in zip(cfg.tag_cols, tags) if v not in (WILDCARD, None)]
+        if as_of is not None:
+            conds.append(F.expr(f"ingest_seq <= {int(as_of)}"))
 
         tag_cols = list(cfg.tag_cols)
         # Presence consults every bucket the reference's loop touches —
         # including the one whose base == end (dbase.go:247,256).
-        scanned = self._pruned(start, end, now, include_end_bucket=True).filter(cond)
-        if as_of is not None:
-            scanned = scanned.filter(F.col("ingest_seq") <= int(as_of))
+        scanned = self._pruned(start, end, now, include_end_bucket=True)
+        if conds:
+            scanned = scanned.filter(functools.reduce(operator.and_, conds))
         series = scanned.select(*tag_cols).distinct()
-        data = scanned.filter((F.col("ts") >= start) & (F.col("ts") < end))
+        data = scanned.filter(f"ts >= {start} AND ts < {end}")
         lww = self._lww(data)
         grid = dense_grid(series, start, end, cfg.resolution)
         return densify(
@@ -587,7 +666,7 @@ class TimeSeriesStore:
         this is OPTIMIZE / rewriteDataFiles. Returns the number of files
         before compaction.
         """
-        part_dir = os.path.join(self.path, f"bucket_ts={bucket_ts}")
+        part_dir = self._bucket_dir(bucket_ts)
         if not os.path.isdir(part_dir):
             return 0
         vis = [f for f in os.listdir(part_dir) if not f.startswith(("_", "."))]
@@ -596,7 +675,8 @@ class TimeSeriesStore:
             return n_files
         total = sum(os.path.getsize(os.path.join(part_dir, f)) for f in vis)
         n_out = max(1, -(-total // target_file_bytes))
-        rows = self.spark.read.parquet(part_dir)  # file index skips _/. names
+        # known schema (no inference job); the file index skips _/. names
+        rows = self.spark.read.schema(self.file_schema).parquet(part_dir)
         staging = os.path.join(self.path, f"_compact_{bucket_ts}")
         (
             rows.repartitionByRange(n_out, *self.config.tag_cols, "ts")

@@ -167,6 +167,8 @@ def fanout(df: DataFrame, *keys: str) -> DataFrame:
     bench already runs the same queries at 8 and 32 cores against one
     oracle hash), and a keyed repartition only changes row placement.
     """
+    if df.isStreaming:  # no RDD to probe; a micro-batch plans its own scan
+        return df
     sc = df.sparkSession.sparkContext
     cores = sc.defaultParallelism
     if df.rdd.getNumPartitions() >= cores:

@@ -496,3 +496,134 @@ def test_corrupt_data_file_fails_loudly(store):
     store._invalidate_hot_cache()
     with _pytest.raises(Exception, match="[Pp]arquet|footer|corrupt|magic"):
         store.get(10990, 11010, ["a", "b", "c", "d"], now=NOW).collect()
+
+
+# ------------------------------------------------------------ fixed costs
+
+
+def _jobs(spark, fn):
+    """(Spark jobs launched while ``fn`` runs, its result). Counted by job
+    group once the listener bus has delivered every job-start event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+@pytest.mark.parametrize(
+    "start,end", [(3000, 3050), (10980, 11010), (3000, 11010)],
+    ids=["cold", "hot", "straddle"],
+)
+def test_building_a_read_runs_no_job(store, start, end):
+    """Building a get/find DataFrame plans nothing eagerly: the read schema
+    is the store's own (no inference job) and only the in-range bucket dirs
+    are listed. The read follows a put, so the hot tier is rebuilt."""
+    seeded(store)
+    store.put_batch([(11010, "a", "b", "c", "d", PB)], now=NOW)
+    n_get, got = _jobs(store.spark, lambda: store.get(start, end, ["a", "b", "c", "d"], now=NOW))
+    n_find, found = _jobs(store.spark, lambda: store.find(start, end, ["a", "b", "c", ""], now=NOW))
+    assert (n_get, n_find) == (0, 0)
+    n_exec, rows = _jobs(store.spark, got.collect)
+    assert n_exec > 0 and len(rows) == (end - start) // 10
+    assert found.count() > 0
+
+
+def test_tuple_put_is_one_job(store):
+    """Tuple rows reach the JVM as one Arrow table: the parquet write is the
+    batch's only job (validation rides on it as an observed metric)."""
+    n, written = _jobs(
+        store.spark,
+        lambda: store.put_batch(
+            [(10990, "a", "b", "c", "d", PA), (11000, "a", "b", "c", "e", PB)], now=NOW
+        ),
+    )
+    assert (n, written) == (1, 2)
+
+
+def test_reads_without_visible_data(store):
+    """An empty store, and one whose bucket dirs hold only hidden orphans of
+    an uncommitted batch: get is dense zeros, find is empty."""
+    import os
+
+    def check():
+        assert payloads(store.get(10990, 11010, ["a", "b", "c", "d"], now=NOW)) == [P0, P0]
+        assert store.find(3000, 11010, ["a", "", "", ""], now=NOW).collect() == []
+
+    check()
+    for base in (3000, 10000, 11000):
+        d = os.path.join(store.path, f"bucket_ts={base}")
+        os.makedirs(d)
+        with open(os.path.join(d, f"_b7-part-{base}.parquet"), "wb") as fh:
+            fh.write(b"not yet published")
+    check()
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [(11000, "a", None, "c", "d", PA), (11000, "a", "b", "c", "d", "1234"),
+     (11000, "a", "b", "c", PA), (None, "a", "b", "c", "d", PA)],
+    ids=["none_tag", "str_payload", "short_row", "none_ts"],
+)
+def test_put_bad_tuple_is_typed_error_and_writes_nothing(store, bad):
+    with pytest.raises(ValidationError):
+        store.put_batch([(11000, "a", "b", "c", "e", PB), bad], now=NOW)
+    assert store._buckets() == []
+    assert payloads(store.get(11000, 11010, ["a", "b", "c", "e"], now=NOW)) == [P0]
+
+
+def test_intra_batch_lww_across_arrow_batches(store):
+    """A tuple batch longer than one Arrow record batch spans several
+    partitions; the later row still wins (partition-major row_seq). The
+    earlier row's payload is the larger one, so a max-by-payload would fail."""
+    spark = store.spark
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        rows = (
+            [(11000, "a", "b", "c", "d", PB)]
+            + [(11010 + 10 * i, "a", "b", "c", "e", PB) for i in range(3)]
+            + [(11000, "a", "b", "c", "d", PA)]
+        )
+        assert store.put_batch(rows, now=NOW) == 5
+    finally:
+        spark.conf.set(key, old)
+    assert payloads(store.get(11000, 11010, ["a", "b", "c", "d"], now=NOW)) == [PA]
+
+
+def test_reopen_under_other_config_fails_loudly(store):
+    """Reads take their schema from the config, so data written under
+    another index_depth would read its missing tags as null (silent zeros).
+    Opening the store compares a part file's footer and refuses instead."""
+    import dataclasses
+
+    seeded(store)
+    with pytest.raises(ValidationError, match="written under"):
+        TimeSeriesStore(store.spark, dataclasses.replace(store.config, index_depth=2))
+    TimeSeriesStore(store.spark, store.config)  # the same config reopens
+
+
+def test_reopen_accepts_int32_ingest_seq_files(store):
+    """Files written before ingest_seq was pinned to a long hold it as
+    int32; the reader widens it, so such a store still opens and reads."""
+    import glob
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    seeded(store)
+    for part in glob.glob(os.path.join(store.path, "bucket_ts=*", "*.parquet")):
+        t = pq.ParquetFile(part).read()
+        i = t.schema.get_field_index("ingest_seq")
+        pq.write_table(t.set_column(i, "ingest_seq", t.column(i).cast(pa.int32())), part)
+    reopened = TimeSeriesStore(store.spark, store.config)
+    assert payloads(reopened.get(10990, 11010, ["a", "b", "c", "d"], now=NOW)) == [PA, P0]
+    assert payloads(reopened.get(3030, 3040, ["a", "b", "c", "d"], now=NOW)) == [bytes([3, 0, 3, 0])]
