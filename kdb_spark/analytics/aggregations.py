@@ -5647,20 +5647,17 @@ def agg_bootstrap_ci(events: DataFrame, reps: int = 32) -> DataFrame:
     rank window over a |types|·reps table. Two tiny shuffles total.
     """
     from kdb_spark.analytics.exact import iround_col
-    from kdb_spark.tables import fanout
 
     x = cents("value")
-    # fanout BEFORE the replicate explode: the |rows|·reps md5 evaluations
-    # are the op's dominant cost and otherwise ride the scan's task count
-    # (one task on single-row-group input — r17 probe: 5.8 s warm, flat
-    # cold-to-warm, i.e. pure single-threaded compute). The exchange moves
-    # only the 3 projected columns, 1/reps-th of the exploded volume.
-    base = fanout(
+    sc = events.sparkSession.sparkContext
+    base = (
         events.select(
             "event_type", F.col("event_id").cast("string").alias("eid"), x.alias("x")
-        ),
-        "eid",
-    ).withColumn("b", F.explode(F.sequence(F.lit(0), F.lit(reps - 1))))
+        )
+        # md5-per-replicate map work on every core (r17: 2.6× at 32 cores)
+        .repartition(sc.defaultParallelism, "eid")
+        .withColumn("b", F.explode(F.sequence(F.lit(0), F.lit(reps - 1))))
+    )
     # one digest per (row, replicate): an A/B against carving 5 slots out
     # of each md5 (one digest per five replicates) showed NO win — the
     # explode+partial-agg, not the hash, is the hot loop, and the
@@ -5762,18 +5759,9 @@ def agg_permutation_test(
     """
     from kdb_spark.analytics.exact import iround_col
 
-    from kdb_spark.tables import fanout
-
     x = cents("value")
-    # fanout before the reps-fold explode: |rows|·reps md5 relabelings are
-    # the op's dominant map cost (the agg_bootstrap_ci shape — guide §2.2);
-    # the exchange carries only the 3 projected columns, 1/reps-th of the
-    # exploded volume, and every aggregate here is decimal/int (invariant)
-    two = fanout(
-        events.filter(F.col("event_type").isin(type_a, type_b)).select(
-            "event_type", F.col("event_id").cast("string").alias("eid"), x.alias("x")
-        ),
-        "eid",
+    two = events.filter(F.col("event_type").isin(type_a, type_b)).select(
+        "event_type", F.col("event_id").cast("string").alias("eid"), x.alias("x")
     )
     obs = (
         two.groupBy()

@@ -105,14 +105,7 @@ def _doc_shingles(documents: DataFrame, n: int = 3) -> DataFrame:
     which the optimizer does not collapse through: its output is an
     attribute, so any number of downstream references cost zero recompute.
     """
-    from kdb_spark.tables import fanout
-
-    # fanout BEFORE tokenize: regexp tokenization + shingle assembly is the
-    # dominant map cost of every shingle consumer and otherwise rides the
-    # scan's task count (single-row-group input → one task; guide §2.2 —
-    # r17 probes: minhash calibration 5.9→2.2 s warm, text_agreement and
-    # the ngram census shift similarly). No-op on multi-split layouts.
-    tok = fanout(documents, "doc_id").select(
+    tok = documents.select(
         "doc_id", F.explode(F.array(tokens("text"))).alias("toks")
     )
     return tok.select(
@@ -407,9 +400,12 @@ def dedup_cross_corpus(
     the best jaccard, and the smallest matching base id (order-independent
     aggregates only — no arg-max ties to diverge cross-engine).
     """
+    sc = documents.sparkSession.sparkContext
+    # shingle map work on every core (r17: 1.19× at 32 cores)
+    spread = documents.repartition(sc.defaultParallelism, "doc_id")
     docs = _reused(
         "xcorpus_shingles",
-        _doc_shingles(documents, n)
+        _doc_shingles(spread, n)
         .filter(F.size("sh") > 0)
         .select(
             "doc_id",
@@ -445,7 +441,10 @@ def dedup_cluster(
     component diameter ≈ 2-4; each round is one shuffle on doc_id. The
     fixpoint (min reachable id) is unique, hence oracle-exact.
     """
-    pairs = dedup_ngram_jaccard(documents, threshold, n, df_cap).select(
+    sc = documents.sparkSession.sparkContext
+    # shingle map work on every core (r17: 1.43× at 32 cores)
+    spread = documents.repartition(sc.defaultParallelism, "doc_id")
+    pairs = dedup_ngram_jaccard(spread, threshold, n, df_cap).select(
         "doc_a", "doc_b"
     )
     return connected_components(pairs, documents.select("doc_id"))
@@ -595,13 +594,8 @@ def simhash64(documents: DataFrame) -> DataFrame:
     lets the DuckDB oracle value-check the signatures — xxhash64 exists
     only in Spark. Still one JVM expression per token, no UDF.
     """
-    from kdb_spark.tables import fanout
-
-    # fanout before tokenize: one md5 per token occurrence is this op's
-    # dominant map cost and must not ride a single scan task (guide §2.2)
     tok = (
-        fanout(documents, "doc_id")
-        .select("doc_id", F.explode(tokens(F.col("text"))).alias("t"))
+        documents.select("doc_id", F.explode(tokens(F.col("text"))).alias("t"))
         .withColumn("m", F.md5("t"))
         .withColumn("h1", F.conv(F.substring("m", 1, 8), 16, 10).cast("long"))
         .withColumn("h2", F.conv(F.substring("m", 9, 8), 16, 10).cast("long"))
@@ -632,9 +626,12 @@ def dedup_simhash(documents: DataFrame, max_hamming: int = 8) -> DataFrame:
     Any pair with hamming ≤ 3 shares at least one exact 16-bit band
     (pigeonhole); wider thresholds trade recall, like all SimHash blocking.
     """
+    sc = documents.sparkSession.sparkContext
+    # md5-per-token work on every core (r17: 1.76× at 32 cores)
+    spread = documents.repartition(sc.defaultParallelism, "doc_id")
     # 16 B/doc — the canonical persist: both join sides read it, and the
     # alternative is running tokenize+md5 over the full corpus twice
-    sh = _reused("simhash_sig", simhash64(documents))
+    sh = _reused("simhash_sig", simhash64(spread))
     bands = sh.select(
         "doc_id",
         "simhash",
@@ -875,11 +872,7 @@ def dedup_keep_best(
     from kdb_spark.llm.textstats import quality_score_expr
 
     labels = dedup_cluster(documents, threshold, n, df_cap)
-    from kdb_spark.tables import fanout
-
-    # fanout the quality pass: tokenize + quality_score_expr per doc is
-    # heavy map work on top of the cluster pipeline's own (fanned) census
-    scored = fanout(documents, "doc_id").select(
+    scored = documents.select(
         "doc_id", "text", tokens("text").alias("toks")
     ).select(
         "doc_id",
@@ -1055,12 +1048,12 @@ def dedup_minhash_calibration(
     jaccard candidate join (the dedup_ngram_jaccard device, same
     df-skew caveat); signatures rejoin the pair table as two 16-long
     arrays and agreement is one zip_with fold. Everything after the
-    candidate join is pair-table-sized. The doc table is fanned out
-    before the shingle explode (tables.fanout inside _doc_shingles): the
-    |docs|·|shingles|·perms md5 evaluations are this op's dominant cost
-    and must not ride a single scan task (r17 probe: 5.9 s → 2.2 s warm).
+    candidate join is pair-table-sized.
     """
-    docs = _doc_shingles(documents, 3)
+    sc = documents.sparkSession.sparkContext
+    # shingle and md5 map work on every core (r17: 2.0× at 32 cores)
+    spread = documents.repartition(sc.defaultParallelism, "doc_id")
+    docs = _doc_shingles(spread, 3)
     flat = docs.select(
         "doc_id", F.explode(F.col("sh")).alias("s"), F.size("sh").alias("n_sh")
     )

@@ -90,11 +90,11 @@ def _pq_codebooks(
                 {"sub": out_s, "cid": out_c, "n": out_n, "s": out_v}
             )
 
-    # NOTE deliberately NOT fanned out (tables.fanout): the per-partition
-    # float64 partial sums fold in row order and are combined on the driver
-    # in partition order — the oracle pins the single-split fold exactly, so
-    # repartitioning would change codeword bits. Parallelism here must come
-    # from the input layout, not an exchange.
+    # NOTE deliberately NOT repartitioned: the per-partition float64
+    # partial sums fold in row order and are combined on the driver in
+    # partition order — the oracle pins the single-split fold exactly, so an
+    # exchange would change codeword bits. Parallelism here must come from
+    # the input layout.
     agg = embeddings.select("embedding").mapInPandas(
         partials, "sub long, cid long, n long, s array<double>"
     ).collect()
@@ -145,17 +145,12 @@ def sim_search_topk(
     — at 100 TB this is the exact-baseline plan: one pass, no corpus
     shuffle, per-query heap via window row_number. Ties broken by vec_id.
     """
-    from kdb_spark.tables import fanout
-
     q = with_norm(embeddings.filter(F.col("vec_id") < n_queries)).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
         F.col("nrm").alias("q_nrm"),
     )
-    # fanout the corpus side: the n_queries·dim dot folds per row are the
-    # op's whole cost and higher-order aggregates never enter whole-stage
-    # codegen, so this map pass must not ride one scan task (guide §2.2)
-    c = with_norm(fanout(embeddings, "vec_id")).select("vec_id", "embedding", "nrm")
+    c = with_norm(embeddings).select("vec_id", "embedding", "nrm")
     scored = (
         c.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("query_id"))
@@ -244,12 +239,7 @@ def emb_near_dup(embeddings: DataFrame, tau: float = 0.4, n_blocks: int = 8) -> 
     return out.select("vec_a", "vec_b", F.round("cos", 6).alias("cos"))
 
 
-def ivf_assign(
-    embeddings: DataFrame,
-    centroids: DataFrame,
-    nprobe: int = 1,
-    fan: bool = True,
-) -> DataFrame:
+def ivf_assign(embeddings: DataFrame, centroids: DataFrame, nprobe: int = 1) -> DataFrame:
     """Assign each vector to its ``nprobe`` nearest centroids (by cosine).
 
     Map-only: the centroid table (√n-ish rows, driver-bounded) is collected
@@ -281,13 +271,6 @@ def ivf_assign(
         lut = np.asarray(cids, dtype="int64")
         return pd.Series(list(lut[top]))
 
-    if fan:
-        # corpus-sized assignment: the Arrow-batched matmul must not ride a
-        # single scan task (guide §2.2); query-side callers pass fan=False
-        # (a handful of rows — repartitioning them buys nothing)
-        from kdb_spark.tables import fanout
-
-        embeddings = fanout(embeddings, "vec_id")
     return embeddings.withColumn("_prbs", probe("embedding")).select(
         *embeddings.columns, F.explode("_prbs").alias("cid")
     )
@@ -340,10 +323,7 @@ def ivf_search_topk(
     cents = ivf_centroids(embeddings, n_clusters)
     corpus = ivf_assign(with_norm(embeddings), cents, nprobe=1)
     queries = ivf_assign(
-        with_norm(embeddings.filter(F.col("vec_id") < n_queries)),
-        cents,
-        nprobe=nprobe,
-        fan=False,
+        with_norm(embeddings.filter(F.col("vec_id") < n_queries)), cents, nprobe=nprobe
     ).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
@@ -509,11 +489,7 @@ def ann_search_topk(
     ≥ 0.9. Approximate vs brute force but deterministic given the seeded
     plane literals, so the DuckDB oracle value-checks it exactly.
     """
-    from kdb_spark.tables import fanout
-
-    # fanout: n_tables·n_bits interpreted sign-dots per row (the bucket
-    # hashes) plus the norm — the op's dominant map cost (guide §2.2)
-    b = _lsh_tables(with_norm(fanout(embeddings, "vec_id")), dim, n_tables, n_bits)
+    b = _lsh_tables(with_norm(embeddings), dim, n_tables, n_bits)
     q = b.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
@@ -668,9 +644,7 @@ def pq_search_topk(
                 {"query_id": qcol, "match_id": mcol, "score_pq": scol}
             )
 
-    from kdb_spark.tables import fanout
-
-    cand = fanout(embeddings.select("vec_id", "embedding"), "vec_id").mapInPandas(
+    cand = embeddings.select("vec_id", "embedding").mapInPandas(
         score, "query_id long, match_id long, score_pq double"
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score_pq"), "match_id")
@@ -726,7 +700,7 @@ def ivfpq_search_topk(
 
     queries = embeddings.filter(F.col("vec_id") < n_queries)
     probes: dict[int, set[int]] = {}
-    for r in ivf_assign(queries, cents, nprobe=nprobe, fan=False).collect():
+    for r in ivf_assign(queries, cents, nprobe=nprobe).collect():
         probes.setdefault(int(r.vec_id), set()).add(int(r.cid))
 
     dim, subdim, books = _pq_codebooks(embeddings, m, ksub)
@@ -771,9 +745,7 @@ def ivfpq_search_topk(
                     {"query_id": qcol, "match_id": mcol, "score_pq": scol}
                 )
 
-    from kdb_spark.tables import fanout
-
-    cand = fanout(embeddings.select("vec_id", "embedding"), "vec_id").mapInPandas(
+    cand = embeddings.select("vec_id", "embedding").mapInPandas(
         score, "query_id long, match_id long, score_pq double"
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score_pq"), "match_id")
@@ -917,12 +889,7 @@ def emb_outliers(embeddings: DataFrame, dim: int = 64, z_thresh: float = 2.0) ->
     guard, rather than the exploding z-scores a raw stddev near 0 would
     produce.
     """
-    from kdb_spark.tables import fanout
-
-    # fanout: three corpus passes of interpreted zip_with/aggregate folds
-    # (centroid partials, distance moments, scoring) must not ride one scan
-    # task; all three aggregates are exact-moment (partition-invariant)
-    v = fanout(embeddings, "vec_id").select(
+    v = embeddings.select(
         "vec_id", _vec_d("embedding").alias("v")
     )
     nn = F.count(F.lit(1)).cast("double")
@@ -984,19 +951,10 @@ def ivf_index_search(
     spark = embeddings.sparkSession
     cents = ivf_centroids(embeddings, n_clusters)
     corpus = ivf_assign(with_norm(embeddings), cents, nprobe=1)
-    # cluster the write by its partition key (guide §6): one exchange on cid
-    # so each inverted list lands as one task → one file per list, instead
-    # of (scan tasks × lists) fragments — the assignment scan above is
-    # fanned out, so an unclustered write would shatter every list
-    corpus.repartition("cid").write.mode("overwrite").partitionBy(
-        "cid"
-    ).parquet(index_path)
+    corpus.write.mode("overwrite").partitionBy("cid").parquet(index_path)
 
     queries = ivf_assign(
-        with_norm(embeddings.filter(F.col("vec_id") < n_queries)),
-        cents,
-        nprobe=nprobe,
-        fan=False,
+        with_norm(embeddings.filter(F.col("vec_id") < n_queries)), cents, nprobe=nprobe
     ).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
@@ -1051,11 +1009,7 @@ def emb_mmr_rerank(
         F.col("embedding").alias("q_emb"),
         F.col("nrm").alias("q_nrm"),
     )
-    from kdb_spark.tables import fanout
-
-    # fanout: the shortlist pass scores the whole corpus with interpreted
-    # dot folds (the only corpus-bounded stage of this op)
-    c = with_norm(fanout(embeddings, "vec_id")).select("vec_id", "embedding", "nrm")
+    c = with_norm(embeddings).select("vec_id", "embedding", "nrm")
     wm = Window.partitionBy("query_id").orderBy(F.desc("rel"), "vec_id")
     cand = (
         c.crossJoin(F.broadcast(q))
@@ -1154,14 +1108,7 @@ def emb_centroid_classify(embeddings: DataFrame, dim: int = 64) -> DataFrame:
     varies with partitioning and can flip a near-tie argmax — tested in
     tests/test_parallelism_invariance.py).
     """
-    from kdb_spark.tables import fanout
-
-    # fanout: the classify pass evaluates |labels| interpreted dot folds per
-    # row (higher-order aggregates never reach whole-stage codegen) and the
-    # map-side sort-agg below rides the same tasks — one scan task would
-    # serialize the op's entire cost (guide §2.2); _qmean centroids and the
-    # struct-max are partition-invariant by construction
-    v = fanout(embeddings, "vec_id").select(
+    v = embeddings.select(
         "vec_id", F.col("label").cast("long").alias("label"),
         _vec_d("embedding").alias("v"),
     )
@@ -1751,11 +1698,7 @@ def emb_label_exemplars(embeddings: DataFrame, k: int = 3, dim: int = 64) -> Dat
     broadcast join back, and a per-label top-k window over |labels|
     partitions — no corpus shuffle, no pairwise work.
     """
-    from kdb_spark.tables import fanout
-
-    # fanout: same rationale as emb_centroid_classify — per-row interpreted
-    # dot folds against the broadcast centroids are the op's whole cost
-    v = fanout(embeddings, "vec_id").select(
+    v = embeddings.select(
         "vec_id", F.col("label").cast("long").alias("label"),
         _vec_d("embedding").alias("v"),
     )
@@ -2009,14 +1952,8 @@ def emb_triplet_eval(embeddings: DataFrame, margin: float = 0.1) -> DataFrame:
     per-anchor scan; then three id-equi joins to fetch vectors and one
     label rollup. All shuffles key on vec_id/label.
     """
-    from kdb_spark.tables import fanout
-
-    # fanout: e feeds six consumers (label ring, anchors, as-of candidates,
-    # three vector fetches), each re-running the scan+cast map work — on a
-    # single-split layout all of it serializes onto one task (guide §2.2)
-    e = fanout(embeddings, "vec_id").select(
-        "vec_id", F.col("label").cast("long").alias("label"),
-        _vec_d("embedding").alias("v"))
+    e = embeddings.select("vec_id", F.col("label").cast("long").alias("label"),
+                          _vec_d("embedding").alias("v"))
     labels = e.select("label").distinct()
     wl = Window.orderBy("label")
     wl_all = wl.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)

@@ -912,11 +912,7 @@ def text_gopher_quality(documents: DataFrame) -> DataFrame:
     Scale shape: map-only, whole-stage codegen; one array_sort + three
     linear folds per row.
     """
-    from kdb_spark.tables import fanout
-
-    # fanout: the per-row array_sort + three interpreted folds are the
-    # op's whole cost and must not ride a single scan task (guide §2.2)
-    t = fanout(documents, "doc_id").select(
+    t = documents.select(
         "doc_id", F.split("text", "\n").alias("ls")
     ).select(
         "doc_id",
@@ -1247,12 +1243,8 @@ def text_source_overlap(documents: DataFrame, n: int = 3) -> DataFrame:
 
     # materialize the token array BEFORE shingling (dedup.shingles
     # contract: an inline tokenizer re-runs per shingle position)
-    from kdb_spark.tables import fanout
-
-    # fanout before tokenize+shingle (the _doc_shingles rationale)
     sh = (
-        fanout(documents, "doc_id")
-        .select("source", tokens("text").alias("toks"))
+        documents.select("source", tokens("text").alias("toks"))
         .select("source", F.explode(shingles(F.col("toks"), n)).alias("s"))
         .distinct()
     )
@@ -1477,11 +1469,8 @@ def text_zipf_fit(documents: DataFrame, top_r: int = 100) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    from kdb_spark.tables import fanout
-
     tf = (
-        fanout(documents, "doc_id")
-        .select("source", F.explode(tokens("text")).alias("tok"))
+        documents.select("source", F.explode(tokens("text")).alias("tok"))
         .groupBy("source", "tok")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
@@ -1546,11 +1535,8 @@ def quality_unigram_logprob(documents: DataFrame) -> DataFrame:
     dimension — never the token stream), the (N, V) scalars broadcast
     via a 1-row cross join. No sort wider than per-doc arrays.
     """
-    from kdb_spark.tables import fanout
-
     dt = (
-        fanout(documents, "doc_id")
-        .select("doc_id", F.explode(tokens("text")).alias("tok"))
+        documents.select("doc_id", F.explode(tokens("text")).alias("tok"))
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).cast("long").alias("cdt"))
     )

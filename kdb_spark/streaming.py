@@ -111,11 +111,10 @@ def _stream_shuffle(spark: SparkSession, partitions: int | None = None):
       Python-worker parallelism wins — 16 beats 8 by ~20% and 32 loses to
       maintenance again.
 
-    These are local-mode sizing choices; on a real cluster the same knob
-    scales with executor count (state partitions sized to data/parallelism,
-    not hardcoded — see SPARK_GRAFT_STREAM_SHUFFLE env)."""
-    # explicit env (an experiment/cluster override) beats per-op sizing
-    n = os.environ.get("SPARK_GRAFT_STREAM_SHUFFLE") or partitions or 8
+    These are local-mode sizing choices; on a real cluster the per-op
+    ``partitions`` argument scales with executor count (state partitions
+    sized to data/parallelism)."""
+    n = partitions or 8
     # Drain-scoped state-store economy (restored on exit): an AvailableNow
     # drain runs a handful of micro-batches against an ephemeral checkpoint
     # that is discarded afterwards, so deep checkpoint retention and eager
@@ -1050,12 +1049,14 @@ def stream_cross_dedup(
 
     documents = load(spark, sf_dir, "documents")
     # SAME cache key as dedup_cross_corpus: the plans are semantically
-    # identical, so whichever op runs first materializes the shingle table
-    # and the other reuses it — the "persisted index" a production pipeline
-    # would share between its batch backfill and its streaming increment.
+    # identical (its repartition included), so whichever op runs first
+    # materializes the shingle table and the other reuses it — the
+    # "persisted index" a production pipeline would share between its batch
+    # backfill and its streaming increment.
+    spread = documents.repartition(spark.sparkContext.defaultParallelism, "doc_id")
     docs = dd._reused(
         "xcorpus_shingles",
-        dd._doc_shingles(documents, n)
+        dd._doc_shingles(spread, n)
         .filter(F.size("sh") > 0)
         .select(
             "doc_id",

@@ -9,9 +9,10 @@ the finest granularity both engines agree on), so the loaders dispatch on
 the *observed* schema and normalize to ``ts_us``:
 
 - LongType (ns)            → ``ts div 1000``  (truncation toward zero)
-- Timestamp / TimestampNTZ → ``unix_micros(cast(ts as timestamp))`` with the
-  session timezone pinned to UTC (kdb_spark/session.py), which reproduces
-  DuckDB's ``epoch_us(ts)`` exactly.
+- TimestampNTZ             → ``timestampdiff(MICROSECOND, <NTZ epoch>, ts)``,
+  wall-clock arithmetic that never consults the session time zone, so it
+  reproduces DuckDB's ``epoch_us(ts)`` exactly in any session
+- Timestamp (an instant)   → ``unix_micros(ts)``, zone-free by definition
 
 Cross-engine note (oracle parity): DuckDB truncates sub-µs input to
 microseconds on read, so every time comparison in the oracle-checked queries
@@ -106,12 +107,19 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+# NTZ arithmetic is wall-clock arithmetic; a cast to or from TIMESTAMP (an
+# instant) would go through the session time zone
+_NTZ_EPOCH = "TIMESTAMP_NTZ'1970-01-01 00:00:00'"
+
+
 def ts_us_expr(df: DataFrame, col: str = "ts") -> Column:
     """µs-epoch long view of a timestamp column, whatever its physical type."""
     dt = df.schema[col].dataType
     if isinstance(dt, T.LongType):  # ns-long (legacy nanosAsLong read)
         return F.expr(f"{col} div 1000")
-    return F.unix_micros(F.col(col).cast("timestamp"))
+    if isinstance(dt, T.TimestampNTZType):
+        return F.expr(f"timestampdiff(MICROSECOND, {_NTZ_EPOCH}, {col})")
+    return F.unix_micros(F.col(col))
 
 
 def ts_raw_range(
@@ -120,14 +128,18 @@ def ts_raw_range(
     """[start,end) predicate stated in the raw column's OWN type, so it can
     reach the parquet scan (PushedFilters → row-group stat skipping). A
     filter on the derived ``ts_us`` column never pushes down; this one does.
-    The boundary literals are constant-folded casts — the scan side stays a
-    bare column reference."""
+    The boundary literals constant-fold — the scan side stays a bare column
+    reference."""
     dt = df.schema[col].dataType
     c = F.col(col)
     if isinstance(dt, T.LongType):  # ns-long: exact for nonnegative ts
         return (c >= start_us * 1000) & (c < end_us * 1000)
-    lo = F.timestamp_micros(F.lit(start_us)).cast(dt)
-    hi = F.timestamp_micros(F.lit(end_us)).cast(dt)
+    if isinstance(dt, T.TimestampNTZType):
+        lo = F.expr(f"timestampadd(MICROSECOND, {start_us}, {_NTZ_EPOCH})")
+        hi = F.expr(f"timestampadd(MICROSECOND, {end_us}, {_NTZ_EPOCH})")
+    else:
+        lo = F.timestamp_micros(F.lit(start_us))
+        hi = F.timestamp_micros(F.lit(end_us))
     return (c >= lo) & (c < hi)
 
 
@@ -144,36 +156,6 @@ def events_us(spark: SparkSession, sf_dir: str) -> DataFrame:
         if _cacheable(path):
             cache[key] = out
     return out
-
-
-def fanout(df: DataFrame, *keys: str) -> DataFrame:
-    """Scan-parallelism floor for compute-heavy map stages (guide §2.2/§2.5).
-
-    Parquet scans parallelize by row group; a table written as one row
-    group (the driver's test tables, any small-file ingest) plans as ONE
-    scan task no matter how many cores the session has, so expensive
-    per-row map work downstream (md5 storms, shingle explodes, per-row
-    trig) runs single-threaded. When the plan's current parallelism is
-    below the session's cores, hash-repartition on the given deterministic
-    high-cardinality key(s) — never rand()-derived (SPARK-38388) — so the
-    heavy map stage uses every core. On a production layout the scan
-    already has ≥ cores splits and this returns the input unchanged (no
-    exchange, no plan growth). Cost when it fires: one exchange of the
-    *projected* input (callers project first), bytes proportional to the
-    data that was about to be map-exploded anyway.
-
-    Value-safe by construction for this registry: every declared op is
-    partition-count invariant (integer/decimal sums, sorted folds — the
-    bench already runs the same queries at 8 and 32 cores against one
-    oracle hash), and a keyed repartition only changes row placement.
-    """
-    if df.isStreaming:  # no RDD to probe; a micro-batch plans its own scan
-        return df
-    sc = df.sparkSession.sparkContext
-    cores = sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= cores:
-        return df
-    return df.repartition(cores, *keys)
 
 
 def cents(col: str | F.Column) -> F.Column:

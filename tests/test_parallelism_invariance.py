@@ -99,6 +99,9 @@ EVENT_OPS = [
     agg.agg_event_study,
     agg.agg_grid_completeness,
     bh.agg_attribution,
+    # md5 resampling folds into exact integer/decimal sums — placement-free
+    agg.agg_bootstrap_ci,
+    agg.agg_permutation_test,
 ]
 
 DOC_OPS = [
@@ -117,6 +120,12 @@ DOC_OPS = [
     cu.curation_filter_funnel,  # integer gates + one hash agg
     tx.token_length_profile,  # rank device per source
     tx.text_source_overlap,  # distinct shingle sets — placement-free
+    # near-dup family: shingle/MinHash sets and exact jaccard are
+    # placement-free, whether or not the op repartitions its own input
+    dd.dedup_simhash,
+    dd.dedup_minhash_calibration,
+    dd.dedup_near_minhash,
+    dd.dedup_cluster,
 ]
 
 
@@ -144,7 +153,7 @@ def test_doc_ops_parallelism_invariant(spark, op):
 
 from kdb_spark.llm import similarity as sim  # noqa: E402
 
-EMB_OPS = [sim.emb_outliers, sim.emb_centroid_classify, sim.emb_dim_stats, sim.emb_quantize_sq8, sim.emb_hamming_topk, sim.emb_label_drift, sim.emb_label_spread, sim.emb_label_affinity, sim.emb_hard_negatives]
+EMB_OPS = [sim.emb_outliers, sim.emb_centroid_classify, sim.emb_dim_stats, sim.emb_quantize_sq8, sim.emb_hamming_topk, sim.emb_label_drift, sim.emb_label_spread, sim.emb_label_affinity, sim.emb_hard_negatives, sim.sim_search_topk]
 
 
 @pytest.mark.parametrize("op", EMB_OPS, ids=lambda f: f.__name__)

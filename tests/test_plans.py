@@ -708,3 +708,36 @@ def test_r16_keys_never_cartesian_and_stay_jvm_side(spark):
     wplan = plan_of(agg.agg_welch_t(ev))
     assert "Join" not in wplan, wplan
     assert "EvalPython" not in wplan, wplan
+
+
+# Registry keys whose operators choose their own scan parallelism — an
+# explicit repartition before the map-heavy stage, or none — found by
+# walking the call graph from those operators to the registry lambdas.
+SCAN_PARALLELISM_KEYS = [
+    "agg_bootstrap_ci", "agg_permutation_test", "dedup_ngram_jaccard",
+    "dedup_near_minhash", "dedup_cross_corpus", "dedup_simhash",
+    "dedup_cluster", "decontaminate_fuzzy", "dedup_keep_best",
+    "dedup_minhash_calibration", "sim_search_topk", "ann_search_topk",
+    "ivf_search_topk", "pq_search_topk", "emb_kmeans", "emb_outliers",
+    "ivf_index_search", "emb_mmr_rerank", "emb_centroid_classify",
+    "ivfpq_search_topk", "emb_recall_eval", "emb_label_exemplars",
+    "emb_text_agreement", "emb_triplet_eval", "text_gopher_quality",
+    "text_source_overlap", "text_ngram_novelty", "text_zipf_fit",
+    "quality_unigram_logprob", "stream_cross_dedup",
+]
+
+
+def test_query_build_never_touches_rdd(spark, monkeypatch):
+    """Building a query's DataFrame must not go through ``DataFrame.rdd``:
+    the RDD conversion analyzes and plans the whole input at build time,
+    before the caller asked for any result."""
+    import __spark_entry__ as entry
+
+    def no_rdd(self):
+        raise AssertionError("DataFrame.rdd called while building a query")
+
+    queries = entry.queries()
+    # the concrete class: Spark 4's classic DataFrame overrides ``rdd``
+    monkeypatch.setattr(type(spark.range(1)), "rdd", property(no_rdd))
+    for key in SCAN_PARALLELISM_KEYS:
+        assert isinstance(queries[key](spark, SF_DIR), DataFrame), key
