@@ -25,97 +25,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
-    from pyspark.sql import SparkSession
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     import __spark_entry__ as entry
+    from kdb_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .appName("kdb_spark_bench")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # warmup: JVM/codegen spin-up and table file listing, so the first
-    # timed query doesn't absorb session startup cost
-    from kdb_spark.tables import TABLE_NAMES, load
-
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    for t in TABLE_NAMES:
-        load(spark, sf_dir, t).count()
-
-    # spin up the Python worker daemon pool (long-lived on a real cluster)
-    def _ident(batches):
-        yield from batches
-
-    (
-        spark.range(int(cpus) * 10)
-        .repartition(int(cpus))
-        .mapInPandas(_ident, "id long")
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
-
-    # JIT/codegen INFRASTRUCTURE warm-up: compile-and-run three throwaway
-    # plan shapes (window chain, regexp explode-agg, shuffle join) so the
-    # first timed queries don't absorb the one-time JVM compilation of the
-    # window/regex/join executor classes — without this, per-key cold
-    # timings depend on registry order (the first ~5 queries measured
-    # 2-4x their steady-state cold cost). These plans are distinct from
-    # every timed query, so each timed query still pays its OWN
-    # whole-stage-codegen compile — the cost the cold metric is defined
-    # to include.
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("event_id")
-    (
-        ev.withColumn("l", F.lag("value", 2).over(w))
-        .withColumn("s", F.sum("value").over(w.rowsBetween(-5, -1)))
-        .groupBy("user_id")
-        .agg(F.max("s"), F.min("l"))
-        .write.format("noop").mode("overwrite").save()
-    )
-    docs = load(spark, sf_dir, "documents")
-    (
-        docs.select(
-            F.explode(
-                F.regexp_extract_all(F.lower("source"), F.lit("[a-z]{2,}"), 0)
-            ).alias("t")
-        )
-        .groupBy("t").count()
-        .write.format("noop").mode("overwrite").save()
-    )
-    o, c = load(spark, sf_dir, "orders"), load(spark, sf_dir, "customer")
-    (
-        o.join(c.hint("shuffle_hash"), o.o_custkey == c.c_custkey)
-        .groupBy("c_nationkey").agg(F.count(F.lit(1)))
-        .write.format("noop").mode("overwrite").save()
-    )
-    # union-and-carry (asof-family) executor path: unbounded-frame
-    # last/first(ignorenulls) carries over a union — again a distinct plan
-    wu = Window.partitionBy("user_id").orderBy("event_id")
-    u = ev.select("user_id", "event_id", F.col("value").alias("a"),
-                  F.lit(None).cast("double").alias("b")).unionByName(
-        ev.select("user_id", (F.col("event_id") + 1).alias("event_id"),
-                  F.lit(None).cast("double").alias("a"),
-                  F.col("value").alias("b")))
-    (
-        u.withColumn("ca", F.last("a", ignorenulls=True).over(wu))
-        .withColumn("cb", F.first("b", ignorenulls=True).over(
-            wu.rowsBetween(0, Window.unboundedFollowing)))
-        .groupBy("user_id").agg(F.max("ca"), F.min("cb"))
-        .write.format("noop").mode("overwrite").save()
-    )
+    spark = get_spark("kdb_spark_bench", cpus=cpus)
+    warm_up(spark, sf_dir, cpus)
 
     qs = entry.queries()
     if hasattr(entry, "registration_order"):
@@ -208,6 +124,82 @@ def main() -> int:
     spark.stop()
     return 0
 
+
+def warm_up(spark, sf_dir: str, cpus: int) -> None:
+    """Pay the session's one-time costs before anything is timed: JVM and
+    codegen spin-up, table file listing, the Python worker pool, and the
+    JIT compiles of the window, regex, join and union executor paths."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from kdb_spark.tables import TABLE_NAMES, load
+
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    for t in TABLE_NAMES:
+        load(spark, sf_dir, t).count()
+
+    # spin up the Python worker daemon pool (long-lived on a real cluster)
+    def _ident(batches):
+        yield from batches
+
+    (
+        spark.range(cpus * 10)
+        .repartition(cpus)
+        .mapInPandas(_ident, "id long")
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
+    )
+
+    # JIT/codegen INFRASTRUCTURE warm-up: compile-and-run three throwaway
+    # plan shapes (window chain, regexp explode-agg, shuffle join) so the
+    # first timed queries don't absorb the one-time JVM compilation of the
+    # window/regex/join executor classes — without this, per-key cold
+    # timings depend on registry order (the first ~5 queries measured
+    # 2-4x their steady-state cold cost). These plans are distinct from
+    # every timed query, so each timed query still pays its OWN
+    # whole-stage-codegen compile — the cost the cold metric is defined
+    # to include.
+    ev = load(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("event_id")
+    (
+        ev.withColumn("l", F.lag("value", 2).over(w))
+        .withColumn("s", F.sum("value").over(w.rowsBetween(-5, -1)))
+        .groupBy("user_id")
+        .agg(F.max("s"), F.min("l"))
+        .write.format("noop").mode("overwrite").save()
+    )
+    docs = load(spark, sf_dir, "documents")
+    (
+        docs.select(
+            F.explode(
+                F.regexp_extract_all(F.lower("source"), F.lit("[a-z]{2,}"), 0)
+            ).alias("t")
+        )
+        .groupBy("t").count()
+        .write.format("noop").mode("overwrite").save()
+    )
+    o, c = load(spark, sf_dir, "orders"), load(spark, sf_dir, "customer")
+    (
+        o.join(c.hint("shuffle_hash"), o.o_custkey == c.c_custkey)
+        .groupBy("c_nationkey").agg(F.count(F.lit(1)))
+        .write.format("noop").mode("overwrite").save()
+    )
+    # union-and-carry (asof-family) executor path: unbounded-frame
+    # last/first(ignorenulls) carries over a union — again a distinct plan
+    wu = Window.partitionBy("user_id").orderBy("event_id")
+    u = ev.select("user_id", "event_id", F.col("value").alias("a"),
+                  F.lit(None).cast("double").alias("b")).unionByName(
+        ev.select("user_id", (F.col("event_id") + 1).alias("event_id"),
+                  F.lit(None).cast("double").alias("a"),
+                  F.col("value").alias("b")))
+    (
+        u.withColumn("ca", F.last("a", ignorenulls=True).over(wu))
+        .withColumn("cb", F.first("b", ignorenulls=True).over(
+            wu.rowsBetween(0, Window.unboundedFollowing)))
+        .groupBy("user_id").agg(F.max("ca"), F.min("cb"))
+        .write.format("noop").mode("overwrite").save()
+    )
 
 if __name__ == "__main__":
     sys.exit(main())

@@ -32,14 +32,13 @@ from kdb_spark.errors import (
     RangeError,
     ValidationError,
 )
-from kdb_spark.session import get_spark, tune
+from kdb_spark.session import get_spark
 from kdb_spark.store import TimeSeriesStore
 
 __all__ = [
     "StoreConfig",
     "TimeSeriesStore",
     "get_spark",
-    "tune",
     "KdbSparkError",
     "ValidationError",
     "FutureTimestampError",

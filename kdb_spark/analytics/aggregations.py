@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from kdb_spark.analytics.exact import floor_div_sql, iround_col
-from kdb_spark.tables import DAY_US, HOUR_US, cents
+from kdb_spark.tables import DAY_US, HOUR_US, NTZ_EPOCH, cents, ts_us_expr
 
 
 def agg_resample(events: DataFrame, width_us: int = HOUR_US) -> DataFrame:
@@ -82,7 +82,7 @@ def agg_hll_merge(events: DataFrame) -> DataFrame:
     map-side partials. Estimates are engine-specific → rows-only check.
     """
     per_day = events.groupBy(
-        "event_type", F.date_trunc("day", F.timestamp_micros(F.col("ts_us"))).alias("day")
+        "event_type", (F.col("ts_us") - F.col("ts_us") % DAY_US).alias("day")
     ).agg(F.hll_sketch_agg("user_id").alias("sk"))
     return (
         per_day.groupBy("event_type")
@@ -532,7 +532,7 @@ def table_profile(df: DataFrame, approx: bool = False) -> DataFrame:
         t = fld.dataType.simpleString()
         # explicit kind dispatch: only genuinely numeric types take the
         # double-cast branch; date rides the timestamp path (µs at
-        # midnight UTC); everything else (binary, array, struct, map)
+        # midnight); everything else (binary, array, struct, map)
         # profiles null-count/NDV only — casting those to double would
         # yield NULL stats or fail analysis outright.
         if t == "string":
@@ -551,11 +551,7 @@ def table_profile(df: DataFrame, approx: bool = False) -> DataFrame:
             # aggregate is what keeps it hash-able (see docstring)
             mn_n, mx_n = num_null, num_null
         else:
-            c = (
-                F.unix_micros(F.col(name).cast("timestamp"))  # NTZ-safe (UTC session)
-                if kind == "ts"
-                else F.col(name)
-            ).cast("double")
+            c = (ts_us_expr(df, name) if kind == "ts" else F.col(name)).cast("double")
             mn_n, mx_n = F.min(c), F.max(c)
         # map columns are not comparable in Spark — countDistinct would
         # fail analysis, so their NDV is null (count of non-nulls stands)
@@ -1046,22 +1042,23 @@ def sql_ship_priority(
     (TakeOrderedAndProject, never a global sort).
     """
     return lineitem.sparkSession.sql(
-        """
-        SELECT l.l_orderkey, unix_micros(CAST(o.o_orderdate AS TIMESTAMP))
+        f"""
+        SELECT l.l_orderkey,
+               timestampdiff(MICROSECOND, {NTZ_EPOCH}, o.o_orderdate)
                  AS orderdate_us,
                o.o_orderpriority,
                CAST(count(*) AS BIGINT) AS n_items,
                sum(CAST(round(l.l_extendedprice * (1 - l.l_discount) * 100)
                         AS BIGINT)) AS revenue_c
-        FROM {customer_v} c
-        JOIN {orders_v} o ON c.c_custkey = o.o_custkey
-        JOIN {lineitem_v} l ON l.l_orderkey = o.o_orderkey
+        FROM {{customer_v}} c
+        JOIN {{orders_v}} o ON c.c_custkey = o.o_custkey
+        JOIN {{lineitem_v}} l ON l.l_orderkey = o.o_orderkey
         WHERE c.c_mktsegment = 'BUILDING'
           AND o.o_orderdate < TIMESTAMP '1998-07-01 00:00:00'
           AND l.l_shipdate > TIMESTAMP '1998-07-01 00:00:00'
         GROUP BY l.l_orderkey, o.o_orderdate, o.o_orderpriority
         ORDER BY revenue_c DESC, l.l_orderkey
-        LIMIT {k_v}
+        LIMIT {{k_v}}
         """,
         customer_v=customer,
         orders_v=orders,
@@ -2380,35 +2377,40 @@ def sql_waiting_supplier(supplier: DataFrame, lineitem: DataFrame) -> DataFrame:
     text.
     """
     return lineitem.sparkSession.sql(
-        """
+        f"""
         WITH sm AS (
-          SELECT l_orderkey, l_suppkey, max(l_shipdate) AS m
-          FROM {lineitem_v}
+          SELECT l_orderkey,
+                 CASE WHEN l_suppkey BETWEEN 0 AND 2147483647 THEN l_suppkey
+                      ELSE raise_error(concat(
+                        'sql_waiting_supplier: suppkey outside 31-bit pack range: ',
+                        l_suppkey)) END AS l_suppkey,
+                 timestampdiff(SECOND, {NTZ_EPOCH}, max(l_shipdate)) AS s
+          FROM {{lineitem_v}}
           GROUP BY l_orderkey, l_suppkey),
         po AS (
           -- one hash agg replaces the multi/mx/at_mx join tree: the max
           -- shipdate is held by a UNIQUE supplier iff the argmax under
           -- suppkey-ASC and suppkey-DESC tiebreaks agree. The (date, supp)
-          -- key is packed into ONE BIGINT (days<<32 | suppkey — the repo's
+          -- key is packed into ONE BIGINT (seconds<<31 | suppkey — the repo's
           -- packed-long device, cf. join_band_topk) because max(LONG) stays
           -- a partial-aggregated HashAggregate while max(STRUCT) planned as
           -- SortAggregate and re-sorted the order-grain table (r16 — the
           -- prior CTE tree also re-expanded sm per reference, shuffling
-          -- the fact-sized agg 4x). Key = exact epoch seconds (the NTZ
-          -- shipdates are day-grain; UTC session) << 31 | suppkey; suppkey
-          -- < 2^31 holds to TPC-H SF ~2e5 and the packed key fits BIGINT
-          -- through year 2106.
+          -- the fact-sized agg 4x). Key = exact epoch seconds of the NTZ
+          -- shipdate << 31 | suppkey; sm raises on a suppkey outside
+          -- [0, 2^31) (TPC-H SF ~2e5 stays inside), and the packed key
+          -- fits BIGINT through year 2106.
           SELECT l_orderkey,
                  count(*) AS n_supp,
-                 max(unix_seconds(CAST(m AS TIMESTAMP)) * 2147483648 + l_suppkey) AS hi,
-                 max(unix_seconds(CAST(m AS TIMESTAMP)) * 2147483648 + (2147483647 - l_suppkey)) AS lo
+                 max(s * 2147483648 + l_suppkey) AS hi,
+                 max(s * 2147483648 + (2147483647 - l_suppkey)) AS lo
           FROM sm GROUP BY l_orderkey),
         blamed AS (
           SELECT hi % 2147483648 AS l_suppkey FROM po
           WHERE n_supp >= 2
             AND hi % 2147483648 = 2147483647 - lo % 2147483648)
         SELECT s.s_name, CAST(count(*) AS BIGINT) AS numwait
-        FROM blamed b JOIN {supplier_v} s ON s.s_suppkey = b.l_suppkey
+        FROM blamed b JOIN {{supplier_v}} s ON s.s_suppkey = b.l_suppkey
         GROUP BY s.s_name
         ORDER BY numwait DESC, s.s_name
         LIMIT 10
@@ -4997,7 +4999,7 @@ def sql_rapid_reorders(orders: DataFrame, within_days: int = 7) -> DataFrame:
         f"""
         WITH t AS (
           SELECT o_custkey, o_orderkey,
-                 unix_micros(CAST(o_orderdate AS TIMESTAMP))
+                 timestampdiff(MICROSECOND, {NTZ_EPOCH}, o_orderdate)
                    DIV 86400000000 AS day,
                  CAST(round(o_totalprice * 100) AS BIGINT) AS price_c
           FROM {{orders_v}}),
@@ -5082,7 +5084,7 @@ def sql_open_order_aging(orders: DataFrame, now_day: int = 11536) -> DataFrame:
     return orders.sparkSession.sql(
         f"""
         WITH o AS (
-          SELECT CAST(({now_day} - unix_micros(CAST(o_orderdate AS TIMESTAMP))
+          SELECT CAST(({now_day} - timestampdiff(MICROSECOND, {NTZ_EPOCH}, o_orderdate)
                        DIV 86400000000) AS BIGINT) AS age_d,
                  CAST(round(o_totalprice * 100) AS BIGINT) AS price_c
           FROM {{orders_v}} WHERE o_orderstatus = 'O'),
@@ -5170,11 +5172,11 @@ def sql_segment_migration(orders: DataFrame, split_day: int = 10227) -> DataFram
         f"""
         WITH spend AS (
           SELECT o_custkey,
-                 CAST(sum(CASE WHEN unix_micros(CAST(o_orderdate AS TIMESTAMP))
+                 CAST(sum(CASE WHEN timestampdiff(MICROSECOND, {NTZ_EPOCH}, o_orderdate)
                                     DIV 86400000000 < {split_day}
                                THEN round(o_totalprice * 100) ELSE 0 END)
                       AS BIGINT) AS h1_c,
-                 CAST(sum(CASE WHEN unix_micros(CAST(o_orderdate AS TIMESTAMP))
+                 CAST(sum(CASE WHEN timestampdiff(MICROSECOND, {NTZ_EPOCH}, o_orderdate)
                                     DIV 86400000000 >= {split_day}
                                THEN round(o_totalprice * 100) ELSE 0 END)
                       AS BIGINT) AS h2_c

@@ -1,18 +1,12 @@
-"""SparkSession construction and runtime tuning.
+"""The one SparkSession factory for every local harness.
 
-Two entry points:
+:func:`get_spark` builds (or reuses, via ``getOrCreate``) a local-mode
+session for the tests, ``bench.py``, perfbench and the tools. Local mode is
+one JVM, so ``spark.driver.memory`` is the only memory knob that matters.
 
-- :func:`get_spark` — build a session for local runs (tests, bench). Local
-  mode = one JVM; ``spark.driver.memory`` is the only memory knob that
-  matters.
-- :func:`tune` — apply the *runtime-settable* confs to an externally-created
-  session (the driver harness passes its own ``SparkSession`` into
-  ``queries()`` callables, so static builder confs never reach it).
-
-Scale posture (100 TB, ~1000 executors): every conf here is either
-runtime-safe or a local-mode default; on a real cluster the same code runs
-with cluster-level memory/executor sizing, and correctness never depends on
-these values — AQE adapts shuffle partitioning at runtime.
+Results never depend on a conf set here: a session built elsewhere (a
+caller of ``__spark_entry__.queries()`` may pass its own) gives the same
+rows, and no query's time arithmetic consults the session time zone.
 """
 
 from __future__ import annotations
@@ -21,75 +15,28 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Runtime-settable confs applied to any session we touch.
-_RUNTIME_CONF: dict[str, str] = {
-    # deterministic timestamp semantics vs the DuckDB oracle (naive/UTC)
-    "spark.sql.session.timeZone": "UTC",
-    # AQE: runtime shuffle-partition coalescing, skew-join splitting,
-    # empty-relation propagation — the reference's storage-layout tricks
-    # (SURVEY.md §4) are all subsumed by these + partition pruning.
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Arrow for any pandas-UDF path (LLM-data operators)
-    "spark.sql.execution.arrow.pyspark.enabled": "true",
-    # dimension tables (region/nation/customer/supplier/part at these SFs)
-    # should always broadcast; AQE also converts at runtime when post-shuffle
-    # sizes allow.
-    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-    # Runtime row-level filtering for large shuffle joins: inject a Bloom
-    # filter built from the smaller side's join keys into the bigger side's
-    # SCAN, so non-matching rows die at the source instead of riding the
-    # Exchange — at 100 TB this is the difference between shuffling a
-    # selective fact-fact join's full probe side and shuffling only the
-    # ~matching fraction. No-ops on small/broadcast joins; purely a
-    # runtime optimization, never affects results.
-    # NOTE: do NOT add spark.sql.optimizer.runtimeFilter.semiJoinReduction
-    # here — the conf was REMOVED in Spark 4.0, and a removed conf in the
-    # BUILDER poisons the session: the deferred option application throws
-    # AnalysisException inside the first RuntimeConf call, and pyspark
-    # 4.1.2's exception converter (recover_python_exception → __str__ →
-    # py4j) recurses forever — get_spark() livelocks at startup. (tune()'s
-    # conf.set path merely raises and is caught; only the builder path
-    # livelocks.) Bloom-filter runtime pruning below is the surviving,
-    # valid half of that tuning.
-    "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-}
-
-
-def tune(spark: SparkSession, shuffle_partitions: int | None = None) -> SparkSession:
-    """Apply runtime confs; safe to call repeatedly on a borrowed session."""
-    for k, v in _RUNTIME_CONF.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # non-settable in this deployment — keep going
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    try:
-        spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    except Exception:
-        pass
-    return spark
-
 
 def get_spark(
     app_name: str = "kdb_spark",
     cpus: int | None = None,
     driver_memory: str | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a local session sized from ``SPARK_GRAFT_CPUS``."""
+    """Build (or reuse) a ``local[cpus]`` session; ``cpus`` defaults to
+    ``SPARK_GRAFT_CPUS`` and the heap to ``SPARK_GRAFT_DRIVER_MEM`` (16g)."""
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    builder = (
+    spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.driver.memory", driver_memory or os.environ.get("KDB_SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            driver_memory or os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.partitions", str(cpus))
+        # pandas <-> Spark via Arrow: ~4x faster on a 13k-row pandas frame
+        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .getOrCreate()
     )
-    for k, v in _RUNTIME_CONF.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return tune(spark, shuffle_partitions=cpus)
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark

@@ -16,6 +16,7 @@ from pyspark.sql import types as T
 
 from kdb_spark.analytics.exact import floor_div_sql
 from kdb_spark.errors import ConcurrentWriteError, CorruptManifestError
+from kdb_spark.tables import ts_us_expr
 
 
 def _load_manifest(path: str, version: int) -> dict:
@@ -304,19 +305,12 @@ def q_scan_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """orders → JSON-lines → scan_json with explicit schema. Timestamps and
     money normalized to (µs long, bigint cents) pre-write: JSON carries them
     losslessly and the oracle compares exact integers."""
-    from pyspark.sql import functions as F
-
-    df = (
-        scan_parquet(spark, f"{sf_dir.rstrip('/')}/orders.parquet")
-        .filter(F.col("o_orderstatus") == "F")
-        .select(
-            "o_orderkey",
-            "o_custkey",
-            # o_orderdate reads as TIMESTAMP_NTZ; session tz is UTC so the
-            # cast matches DuckDB's epoch_us(naive-as-UTC)
-            F.unix_micros(F.col("o_orderdate").cast("timestamp")).alias("date_us"),
-            F.round(F.col("o_totalprice") * 100).cast("long").alias("total_c"),
-        )
+    orders = scan_parquet(spark, f"{sf_dir.rstrip('/')}/orders.parquet")
+    df = orders.filter(F.col("o_orderstatus") == "F").select(
+        "o_orderkey",
+        "o_custkey",
+        ts_us_expr(orders, "o_orderdate").alias("date_us"),
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("total_c"),
     )
     path = _tmp("json")
     sink_json(df, path)

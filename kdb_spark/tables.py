@@ -109,7 +109,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 # NTZ arithmetic is wall-clock arithmetic; a cast to or from TIMESTAMP (an
 # instant) would go through the session time zone
-_NTZ_EPOCH = "TIMESTAMP_NTZ'1970-01-01 00:00:00'"
+NTZ_EPOCH = "TIMESTAMP_NTZ'1970-01-01 00:00:00'"
 
 
 def ts_us_expr(df: DataFrame, col: str = "ts") -> Column:
@@ -118,7 +118,9 @@ def ts_us_expr(df: DataFrame, col: str = "ts") -> Column:
     if isinstance(dt, T.LongType):  # ns-long (legacy nanosAsLong read)
         return F.expr(f"{col} div 1000")
     if isinstance(dt, T.TimestampNTZType):
-        return F.expr(f"timestampdiff(MICROSECOND, {_NTZ_EPOCH}, {col})")
+        return F.expr(f"timestampdiff(MICROSECOND, {NTZ_EPOCH}, {col})")
+    if isinstance(dt, T.DateType):  # midnight of the day, like NTZ
+        return F.unix_date(F.col(col)).cast("long") * DAY_US
     return F.unix_micros(F.col(col))
 
 
@@ -135,8 +137,8 @@ def ts_raw_range(
     if isinstance(dt, T.LongType):  # ns-long: exact for nonnegative ts
         return (c >= start_us * 1000) & (c < end_us * 1000)
     if isinstance(dt, T.TimestampNTZType):
-        lo = F.expr(f"timestampadd(MICROSECOND, {start_us}, {_NTZ_EPOCH})")
-        hi = F.expr(f"timestampadd(MICROSECOND, {end_us}, {_NTZ_EPOCH})")
+        lo = F.expr(f"timestampadd(MICROSECOND, {start_us}, {NTZ_EPOCH})")
+        hi = F.expr(f"timestampadd(MICROSECOND, {end_us}, {NTZ_EPOCH})")
     else:
         lo = F.timestamp_micros(F.lit(start_us))
         hi = F.timestamp_micros(F.lit(end_us))

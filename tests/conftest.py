@@ -5,23 +5,12 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
+from kdb_spark.session import get_spark  # noqa: E402
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("kdb_spark-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "4g")
-        .getOrCreate()
-    )
-    s.sparkContext.setLogLevel("ERROR")
-    yield s
+    return get_spark("kdb_spark-tests", cpus=4, driver_memory="4g")
 
 
 SF_DIR = "/root/testdata/sf0.001"

@@ -289,6 +289,23 @@ def test_jaccard_rejects_doc_id_beyond_32bit_pack(spark):
         dd.dedup_ngram_jaccard(df, threshold=0.01).collect()
 
 
+def test_waiting_supplier_rejects_suppkey_beyond_31bit_pack(spark):
+    """sql_waiting_supplier packs epoch seconds << 31 | suppkey; a suppkey
+    outside [0, 2^31) would alias another supplier, so the job must fail
+    loudly."""
+    import pytest
+
+    from kdb_spark.analytics import aggregations as agg
+
+    li = spark.sql(
+        "SELECT l_orderkey, l_suppkey, TIMESTAMP_NTZ'1995-01-01 00:00:00' AS l_shipdate"
+        " FROM VALUES (1L, 2147483648L), (1L, 3L) AS t(l_orderkey, l_suppkey)"
+    )
+    sup = spark.sql("SELECT 3L AS s_suppkey, 's3' AS s_name")
+    with pytest.raises(Exception, match="31-bit pack range"):
+        agg.sql_waiting_supplier(sup, li).collect()
+
+
 @settings(
     max_examples=6,
     deadline=None,

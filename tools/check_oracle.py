@@ -79,20 +79,12 @@ def main() -> int:
     args = ap.parse_args()
 
     import duckdb
-    from pyspark.sql import SparkSession
     from pyspark.sql import types as T
 
     import __spark_entry__ as entry
+    from kdb_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .appName("check_oracle")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = get_spark("check_oracle", cpus=8, driver_memory="8g")
 
     con = duckdb.connect()
     for t in (

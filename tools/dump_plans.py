@@ -61,7 +61,6 @@ def main() -> int:
     from kdb_spark.session import get_spark
 
     spark = get_spark("plans", cpus=8)
-    spark.sparkContext.setLogLevel("ERROR")
     # AQE wraps un-executed plans in AdaptiveSparkPlan, which hides codegen
     # span ids until runtime; dump the static plan instead. Bench/production
     # runs keep AQE on — it only re-plans (coalesce/skew-split/broadcast

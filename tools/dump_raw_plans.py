@@ -26,7 +26,6 @@ def main() -> int:
     from kdb_spark.session import get_spark
 
     spark = get_spark("rawplans", cpus=8)
-    spark.sparkContext.setLogLevel("ERROR")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     qs = entry.queries()

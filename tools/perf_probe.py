@@ -2,15 +2,18 @@
 """Targeted per-key perf probe for optimization rounds.
 
 For each named key: builds the query at --sf in a bench-grade session
-(same configs + warmup as bench.py), optionally dumps the
+(the same factory and ``bench.warm_up`` as bench.py), optionally dumps the
 `.explain("formatted")` physical plan to --plans-dir/<key>_<tag>.txt,
 then times --reps noop-sink executions (run 1 = cold, rest = warm).
 
 Usage:
     python tools/perf_probe.py [--sf DIR] [--reps 5] \
-        [--plans-dir plans/r16 --tag before] key [key ...]
+        [--plans-dir plans/<round> --tag before] key [key ...]
 
 Prints one line per key:  <key>  cold  w1 w2 ...  (median-warm X)
+
+Rounds 16-17's plan dumps are in git history only, e.g.
+``git show e9615bf:plans/r16/<key>_<tag>.txt``.
 """
 
 from __future__ import annotations
@@ -28,47 +31,18 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--reps", type=int, default=5)
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    ap.add_argument("--cpus", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
     ap.add_argument("--plans-dir", default=None)
     ap.add_argument("--tag", default="before")
     ap.add_argument("names", nargs="+")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entry
+    from bench import warm_up
+    from kdb_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .config("spark.sql.shuffle.partitions", args.cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .appName("kdb_spark_perf_probe")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # bench-grade warmup (mirrors bench.py): JVM/codegen spin-up, table
-    # listing, Python worker daemon pool
-    from kdb_spark.tables import TABLE_NAMES, load
-
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    for t in TABLE_NAMES:
-        load(spark, args.sf, t).count()
-
-    def _ident(batches):
-        yield from batches
-
-    (
-        spark.range(int(args.cpus) * 10)
-        .repartition(int(args.cpus))
-        .mapInPandas(_ident, "id long")
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
+    spark = get_spark("kdb_spark_perf_probe", cpus=args.cpus)
+    warm_up(spark, args.sf, args.cpus)
 
     qs = entry.queries()
     for name in args.names:

@@ -66,21 +66,15 @@ def main() -> int:
     args = ap.parse_args()
 
     import duckdb
-    from pyspark.sql import SparkSession
 
     import __spark_entry__ as entry
+    from kdb_spark.session import get_spark
 
     q = entry.queries()[args.key]
     osql = entry.oracle_sql()[args.key]
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", str(args.shuffle))
-        .config("spark.driver.memory", "24g")
-        .config("spark.sql.session.timeZone", "UTC")
-        .appName(f"rowdiff-{args.key}")
-        .getOrCreate()
-    )
+    spark = get_spark(f"rowdiff-{args.key}", cpus=32, driver_memory="24g")
+    spark.conf.set("spark.sql.shuffle.partitions", str(args.shuffle))
     sdf = q(spark, args.sf).toPandas()
 
     con = duckdb.connect()

@@ -250,7 +250,7 @@ def main() -> int:
 
     from kdb_spark.session import get_spark
 
-    spark = get_spark("scale_probe")
+    spark = get_spark("scale_probe", driver_memory="48g")
     _, flagged = run_probe(spark, scales, ops, keep=args.keep)
     print(f"\nflagged super-linear: {flagged or 'none'}")
     return 1 if flagged else 0
