@@ -333,7 +333,7 @@ _reg(
       -- therefore HUGEINT; without the cast a_id surfaces as float64 in
       -- pandas (23000026.0) while Spark emits bigint — the r13/r14 driver
       -- hash FAIL (rows/schema matched, values didn't). Diagnosed with
-      -- tools/rowdiff.py.
+      -- tools/check_oracle.py --rows.
       SELECT CAST(user_id * 1000000 + session_id AS BIGINT) AS a_id,
              CAST(min(tu) AS BIGINT) AS a_start,
              CAST(max(tu) + 1 AS BIGINT) AS a_end

@@ -65,16 +65,13 @@ WILDCARD = ""  # `mindex/mindex.go:133-142`: "" matches any tag at that depth
 
 
 class TimeSeriesStore:
-    def __init__(
-        self, spark: SparkSession, config: StoreConfig, hot_cache: bool = True
-    ):
+    def __init__(self, spark: SparkSession, config: StoreConfig):
         self.spark = spark
         self.config = config
         self.path = os.path.join(config.data_path, config.database_name)
         os.makedirs(self.path, exist_ok=True)
         # two-tier read cache (`dbase/dbase.go:83-114`): hot buckets pinned,
         # cold buckets streamed. Built lazily on the first hot-range read.
-        self.hot_cache_enabled = hot_cache
         self._hot_df: DataFrame | None = None
         self._hot_min: int | None = None
         self._recover()
@@ -341,7 +338,7 @@ class TimeSeriesStore:
             raise ValidationError(f"row values do not fit {base.simpleString()}: {e}") from e
         return self.spark.createDataFrame(table, base)
 
-    def _manifest_path(self, batch: int) -> str:
+    def _manifest_path(self, batch: int | str) -> str:
         return os.path.join(self.path, f"_batch_{batch}.manifest.json")
 
     def _commit_staging(self, staging: str, batch: int) -> None:
@@ -383,10 +380,22 @@ class TimeSeriesStore:
                         os.path.join(src, part), os.path.join(dest, "_" + final)
                     )
                     moved.append([entry, "_" + final, final])
+        self._publish(batch, moved)
+
+    def _publish(
+        self,
+        batch: int | str,
+        moved: list[list[str]],
+        deletes: list[list[str]] | None = None,
+    ) -> None:
+        """Phases 2 and 3 of :meth:`_commit_staging`, shared with
+        :meth:`compact`: fsync the manifest (the ``moved`` unhides, then the
+        ``deletes``) to a tmp file, ``os.replace`` it into place — the commit
+        point — and replay it."""
         manifest = self._manifest_path(batch)
         tmp = manifest + ".tmp"
         with open(tmp, "w") as fh:
-            json.dump({"batch": batch, "files": moved}, fh)
+            json.dump({"batch": batch, "files": moved, "deletes": deletes or []}, fh)
             fh.flush()
             os.fsync(fh.fileno())
         os.replace(tmp, manifest)  # <-- commit point
@@ -462,11 +471,8 @@ class TimeSeriesStore:
         directory scan; only its hot buckets are listed and read, so the
         (lazy) rebuild runs no Spark job. Invalidated on
         ingest/retention/compact (file set changed) and rebuilt when the hot
-        window slides. Returns None when caching is off or no hot bucket
-        holds data.
+        window slides. Returns None when no hot bucket holds data.
         """
-        if not self.hot_cache_enabled:
-            return None
         hot_min = self.config.hot_min_base(now)
         if self._hot_df is None or self._hot_min != hot_min:
             self._invalidate_hot_cache()
@@ -702,18 +708,7 @@ class TimeSeriesStore:
                         os.path.join(part_dir, "_" + final),
                     )
                     moved.append([entry, "_" + final, final])
-            manifest = os.path.join(self.path, f"_batch_{tag}.manifest.json")
-            tmp = manifest + ".tmp"
-            with open(tmp, "w") as fh:
-                json.dump(
-                    {"batch": tag, "files": moved,
-                     "deletes": [[entry, f] for f in vis]},
-                    fh,
-                )
-                fh.flush()
-                os.fsync(fh.fileno())
-            os.replace(tmp, manifest)  # <-- commit point
-            self._replay_manifest(manifest)
+            self._publish(tag, moved, [[entry, f] for f in vis])
             self._invalidate_hot_cache()
         finally:
             if os.path.exists(staging):

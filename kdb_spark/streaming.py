@@ -86,13 +86,16 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     µs epoch + event-time timestamp cols. Streaming sources never infer."""
     from kdb_spark.tables import load
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir.rstrip('/')}/events.parquet"
     schema = load(spark, sf_dir, "events").schema
     sdf = spark.readStream.schema(schema).parquet(_staged_dir(path))
     return sdf.withColumn("ts_us", ts_us_expr(sdf)).withColumn(
         "ets", F.timestamp_micros(F.col("ts_us"))
     )
+
+
+# shuffle partitions of every applyInPandasWithState drain (`_stream_shuffle`)
+_PY_STATE_PARTITIONS = 16
 
 
 @contextmanager
@@ -113,7 +116,8 @@ def _stream_shuffle(spark: SparkSession, partitions: int | None = None):
 
     These are local-mode sizing choices; on a real cluster the per-op
     ``partitions`` argument scales with executor count (state partitions
-    sized to data/parallelism)."""
+    sized to data/parallelism). `_PY_STATE_PARTITIONS` is the
+    `applyInPandasWithState` choice."""
     n = partitions or 8
     # Drain-scoped state-store economy (restored on exit): an AvailableNow
     # drain runs a handful of micro-batches against an ephemeral checkpoint
@@ -200,6 +204,86 @@ def _drain(
         q.awaitTermination()
     _DRAINED.append((name, ck))
     return spark.table(name)
+
+
+def _stateful_drain(
+    df: DataFrame,
+    keys: tuple[str, ...],
+    fn,
+    out: T.StructType,
+    state: T.StructType,
+    mode: str = "append",
+) -> DataFrame:
+    """Drain a Python-stateful operator: ``fn`` runs once per ``keys`` group
+    per micro-batch through `applyInPandasWithState` (no timeout — state
+    lives as long as its series), and the drain sinks in the same output
+    ``mode`` at the Python-stateful partition count."""
+    grouped = df.groupBy(*keys).applyInPandasWithState(
+        fn,
+        outputStructType=out,
+        stateStructType=state,
+        outputMode=mode,
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+    return _drain(grouped, mode, partitions=_PY_STATE_PARTITIONS)
+
+
+def _on_time(
+    pdfs: Iterator[pd.DataFrame],
+    state: GroupState,
+    order: tuple[str, ...] = ("ts_us", "event_id"),
+) -> tuple[dict[str, np.ndarray], tuple | None, int] | None:
+    """The late-row cut every Python-stateful series operator runs before
+    its fold.
+
+    Out-of-order contract: a row at or before the series' stored tail
+    (lexicographic on ``order``) arrived late across a micro-batch
+    boundary — folding it would corrupt both its own output and the next
+    in-order one, so it is DROPPED and counted in the per-series `n_late`
+    state (the streaming analog of the store's cold-write rejection,
+    `dbucket/dbucket.go:120-122`). Re-deliveries of the tail row itself
+    hit the same cut, so every fold is also idempotent under at-least-once
+    sources.
+
+    The tail is the state's leading ``len(order)`` fields (for a ring
+    state of arrays, the last element of each); `n_late` is the state's
+    last field. Returns None when there is nothing to fold: no rows, or
+    every row late — then the state is rewritten with only `n_late`
+    grown. Otherwise returns ``(cols, prev, n_late)``: every input column
+    as a numpy array of the on-time rows in ``order``, the stored state
+    tuple (None for a new series) and the updated late count.
+
+    numpy throughout: this runs once per series per micro-batch, so the
+    operator's cost is (n_series × per-call constant) — pandas sort_values
+    and .iloc here were ~7× the lexsort/searchsorted equivalent.
+    """
+    chunks = [c for c in pdfs if len(c)]
+    if not chunks:
+        return None
+    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+    keys = [pdf[k].to_numpy() for k in order]
+    idx = np.lexsort(keys[::-1])
+    keys = [k[idx] for k in keys]
+    prev = tuple(state.get) if state.exists else None
+    lo = 0
+    if prev is not None:
+        # late rows sort into a prefix: narrow [a, lo) to the rows equal
+        # to the tail one sort field at a time, so lo ends at the first row
+        # strictly after it
+        a, lo = 0, len(idx)
+        for col, t in zip(keys, prev):
+            t = t[-1] if isinstance(t, list) else t
+            seg = col[a:lo]
+            a, lo = (
+                a + int(np.searchsorted(seg, t, "left")),
+                a + int(np.searchsorted(seg, t, "right")),
+            )
+    n_late = (int(prev[-1]) if prev is not None else 0) + lo
+    if lo == len(idx):
+        state.update(prev[:-1] + (n_late,))
+        return None
+    on_time = idx[lo:]
+    return {k: pdf[k].to_numpy()[on_time] for k in pdf.columns}, prev, n_late
 
 
 # --------------------------------------------------------------------- ingest
@@ -455,18 +539,11 @@ def stream_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     state-store-backed serving layer exposes.
     """
     s = events_stream(spark, sf_dir)
-    latest = (
-        s.select("user_id", "event_type", "ts_us", "event_id", "value")
-        .groupBy("user_id", "event_type")
-        .applyInPandasWithState(
-            _latest_fn,
-            outputStructType=_LATEST_OUT,
-            stateStructType=_LATEST_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    out = _stateful_drain(
+        s.select("user_id", "event_type", "ts_us", "event_id", "value"),
+        ("user_id", "event_type"), _latest_fn, _LATEST_OUT, _LATEST_STATE,
+        "update",
     )
-    out = _drain(latest, "update", partitions=16)
     return (
         out.groupBy("user_id", "event_type")
         .agg(
@@ -506,42 +583,14 @@ def _delta_fn(
 ) -> Iterator[pd.DataFrame]:
     """Chain the stored last sample in front of each micro-batch, emit
     consecutive diffs in (ts_us, event_id) order, persist the new tail.
-
-    Out-of-order contract: a row at or before the series' stored tail
-    (lexicographic (ts_us, event_id)) arrived late across a micro-batch
-    boundary — chaining it would corrupt both its own delta and the next
-    in-order one, so it is DROPPED and counted in the per-series `n_late`
-    state (the streaming analog of the store's cold-write rejection,
-    /root/reference/dbucket/dbucket.go:120-122). Re-deliveries of the tail
-    row itself hit the same guard, so the diff chain is also idempotent
-    under at-least-once sources.
+    Late rows drop-and-count per the `_on_time` contract, which also makes
+    the diff chain idempotent under re-delivery of the tail row.
     """
-    chunks = [c for c in pdfs if len(c)]
-    if not chunks:
+    cut = _on_time(pdfs, state)
+    if cut is None:
         return
-    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-    # numpy throughout: this runs once per series per micro-batch, so the
-    # operator's cost is (n_series × per-call constant) — pandas sort_values
-    # and .iloc here were ~7× the lexsort/searchsorted equivalent.
-    ts = pdf["ts_us"].to_numpy()
-    eid = pdf["event_id"].to_numpy()
-    order = np.lexsort((eid, ts))
-    ts, eid = ts[order], eid[order]
-    val = pdf["value"].to_numpy()[order]
-    prev = tuple(state.get) if state.exists else None
-    n_late = int(prev[3]) if prev is not None else 0
-    lo = 0
-    if prev is not None:
-        # late rows sort into a prefix: first index strictly after the
-        # stored tail, lexicographically on (ts_us, event_id)
-        i0 = int(np.searchsorted(ts, prev[0], "left"))
-        i1 = int(np.searchsorted(ts, prev[0], "right"))
-        lo = i0 + int(np.searchsorted(eid[i0:i1], prev[1], "right"))
-        n_late += lo
-        if lo == len(ts):
-            state.update((prev[0], prev[1], prev[2], n_late))
-            return
-        ts, eid, val = ts[lo:], eid[lo:], val[lo:]
+    c, prev, n_late = cut
+    ts, eid, val = c["ts_us"], c["event_id"], c["value"]
     deltas = np.empty(len(val))
     deltas[1:] = val[1:] - val[:-1]
     # first on-time row chains off the stored tail; with no stored tail it
@@ -550,14 +599,12 @@ def _delta_fn(
     if prev is not None:
         deltas[0] = val[0] - prev[2]
     state.update((int(ts[-1]), int(eid[-1]), float(val[-1]), n_late))
-    if len(val) == (0 if prev is not None else 1):
+    if prev is None and len(val) == 1:
         return
-    uid = pdf["user_id"].to_numpy()[order][lo:]
-    etype = pdf["event_type"].to_numpy()[order][lo:]
     yield pd.DataFrame(
         {
-            "user_id": uid[keep],
-            "event_type": etype[keep],
+            "user_id": c["user_id"][keep],
+            "event_type": c["event_type"][keep],
             "ts_us": ts[keep],
             "event_id": eid[keep],
             "delta": deltas[keep],
@@ -575,7 +622,7 @@ def stream_counter_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch sorts its own rows, chains the stored last sample in front,
     and persists the new tail. Rows that arrive at or before the stored
     tail in a LATER micro-batch are explicitly dropped and counted in the
-    per-series `n_late` state (see `_delta_fn`) — never silently chained
+    per-series `n_late` state (see `_on_time`) — never silently chained
     into a wrong delta. Built on `applyInPandasWithState`;
     the same processor maps 1:1 onto Spark 4's
     `transformWithStateInPandas` ValueState API (unavailable here: its
@@ -583,18 +630,10 @@ def stream_counter_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     The batch oracle is the window `lag` over the same data.
     """
     s = events_stream(spark, sf_dir)
-    out = (
-        s.select("user_id", "event_type", "ts_us", "event_id", "value")
-        .groupBy("user_id", "event_type")
-        .applyInPandasWithState(
-            _delta_fn,
-            outputStructType=_DELTA_OUT,
-            stateStructType=_DELTA_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _stateful_drain(
+        s.select("user_id", "event_type", "ts_us", "event_id", "value"),
+        ("user_id", "event_type"), _delta_fn, _DELTA_OUT, _DELTA_STATE,
     )
-    return _drain(out, "append", partitions=16)
 
 
 # ----------------------------------------------- stateful finite-horizon EWMA
@@ -632,52 +671,46 @@ def _ewma_fn(
     the fold is int64 arithmetic over exact cents with the integer weights
     of `ewma_weights_int`, and the round(6) is the same sign-aware integer
     floor-division the batch op compiles — order- and engine-independent,
-    no IEEE addition-sequence caveat at all. Late rows (at-or-before the
-    stored tail) are dropped and counted, the same contract as `_delta_fn`.
+    no IEEE addition-sequence caveat at all. Late rows drop-and-count per
+    the `_on_time` contract.
     """
     from kdb_spark.analytics.windows import EWMA_H, ewma_weights_int
 
     w = np.asarray(ewma_weights_int(), dtype=np.int64)
-    chunks = [c for c in pdfs if len(c)]
-    if not chunks:
+    lim = (2**63 - 1) // (2_000_000 * int(w.sum()))
+
+    def in_domain(pdf: pd.DataFrame) -> pd.DataFrame:
+        # int64-overflow guard (r11 ADVICE), on every arriving row, late
+        # ones included: the fold computes 2·10^6·Σ w_k·x in int64 and
+        # numpy WRAPS silently on overflow, while the batch op widens to
+        # decimal(38,0) at the same step — past this bound the stream would
+        # silently emit wrong EWMAs instead of erroring, breaking the
+        # documented batch-stream bit-parity. Fail loud at the domain edge
+        # (|cents| ≲ 4.6e6 at the 10^6 weight grid, i.e. ticks under ~$46k).
+        if len(pdf):
+            cents_in = np.rint(pdf["value"].to_numpy() * 100.0).astype(np.int64)
+            worst = int(np.abs(cents_in).max())
+            if worst > lim:
+                raise ValueError(
+                    f"stream_ewma: |cents|={worst} exceeds the exact int64 "
+                    f"fold domain (±{lim}); widen the fold (the batch "
+                    "win_ewma widens to decimal(38,0) here) before raising "
+                    "the tick domain"
+                )
+        return pdf
+
+    cut = _on_time(map(in_domain, pdfs), state)
+    if cut is None:
         return
-    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-    ts = pdf["ts_us"].to_numpy()
-    eid = pdf["event_id"].to_numpy()
-    order = np.lexsort((eid, ts))
-    ts, eid = ts[order], eid[order]
+    c, prev, n_late = cut
+    new_ts, new_eid = c["ts_us"], c["event_id"]
     # exact cents — same per-row double→bigint contract as tables.cents()
     # (values are cents-representable, so rint can never sit on a .5)
-    val = np.rint(pdf["value"].to_numpy()[order] * 100.0).astype(np.int64)
-    # int64-overflow guard (r11 ADVICE): the fold computes 2·10^6·Σ w_k·x
-    # in int64 and numpy WRAPS silently on overflow, while the batch op
-    # widens to decimal(38,0) at the same step — past this bound the
-    # stream would silently emit wrong EWMAs instead of erroring, breaking
-    # the documented batch-stream bit-parity. Fail loud at the domain edge
-    # (|cents| ≲ 4.6e6 at the 10^6 weight grid, i.e. ticks under ~$46k).
-    if len(val):
-        lim = (2**63 - 1) // (2_000_000 * int(w.sum()))
-        worst = int(np.abs(val).max())
-        if worst > lim:
-            raise ValueError(
-                f"stream_ewma: |cents|={worst} exceeds the exact int64 "
-                f"fold domain (±{lim}); widen the fold (the batch "
-                "win_ewma widens to decimal(38,0) here) before raising "
-                "the tick domain"
-            )
-    prev = tuple(state.get) if state.exists else None
-    n_late = int(prev[3]) if prev is not None else 0
-    h_ts = np.asarray(prev[0], dtype=np.int64) if prev is not None else np.empty(0, np.int64)
-    h_eid = np.asarray(prev[1], dtype=np.int64) if prev is not None else np.empty(0, np.int64)
-    h_val = np.asarray(prev[2], dtype=np.int64) if prev is not None else np.empty(0, np.int64)
-    lo = 0
-    if len(h_ts):
-        t_tail, e_tail = int(h_ts[-1]), int(h_eid[-1])
-        i0 = int(np.searchsorted(ts, t_tail, "left"))
-        i1 = int(np.searchsorted(ts, t_tail, "right"))
-        lo = i0 + int(np.searchsorted(eid[i0:i1], e_tail, "right"))
-        n_late += lo
-    new_ts, new_eid, new_val = ts[lo:], eid[lo:], val[lo:]
+    new_val = np.rint(c["value"] * 100.0).astype(np.int64)
+    h_ts, h_eid, h_val = (
+        np.asarray(f, dtype=np.int64)
+        for f in (prev[:3] if prev is not None else ((), (), ()))
+    )
     full_ts = np.concatenate([h_ts, new_ts])
     full_eid = np.concatenate([h_eid, new_eid])
     full_val = np.concatenate([h_val, new_val])
@@ -692,8 +725,6 @@ def _ewma_fn(
             n_late,
         )
     )
-    if not len(new_val):
-        return
     n, off = len(full_val), len(h_val)
     num = np.zeros(n, dtype=np.int64)
     den = np.zeros(n, dtype=np.int64)
@@ -707,12 +738,10 @@ def _ewma_fn(
     nn, dd = num[off:], den[off:]
     e6 = np.sign(nn) * ((2_000_000 * np.abs(nn) + 100 * dd) // (200 * dd))
     ewma = e6 / 1e6
-    uid = pdf["user_id"].to_numpy()[order][lo:]
-    etype = pdf["event_type"].to_numpy()[order][lo:]
     yield pd.DataFrame(
         {
-            "user_id": uid,
-            "event_type": etype,
+            "user_id": c["user_id"],
+            "event_type": c["event_type"],
             "ts_us": new_ts,
             "event_id": new_eid,
             "ewma": ewma,
@@ -727,25 +756,15 @@ def stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     samples, nothing else).
 
     Same late-row contract as `stream_counter_delta` (drop + count behind
-    the stored tail); same `applyInPandasWithState` machinery; emits one
+    the stored tail, `_on_time`); same `applyInPandasWithState` machinery; emits one
     row per on-time event with the EXACT batch value (see `_ewma_fn` on
     addition-order parity), so the batch window query is the oracle.
     """
     s = events_stream(spark, sf_dir)
-    out = (
-        s.select("user_id", "event_type", "ts_us", "event_id", "value")
-        .groupBy("user_id", "event_type")
-        .applyInPandasWithState(
-            _ewma_fn,
-            outputStructType=_EWMA_OUT,
-            stateStructType=_EWMA_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-    return _drain(out, "append", partitions=16).select(
-        "event_id", "user_id", "event_type", "ewma"
-    )
+    return _stateful_drain(
+        s.select("user_id", "event_type", "ts_us", "event_id", "value"),
+        ("user_id", "event_type"), _ewma_fn, _EWMA_OUT, _EWMA_STATE,
+    ).select("event_id", "user_id", "event_type", "ewma")
 
 
 # ------------------------------------------------- stateful rolling z-score
@@ -780,34 +799,22 @@ def _zscore_fn(
     of exact bigint cents (order-independent), and the z derivation
     repeats the batch expression shape on those exact integers — so the
     drained stream equals the batch window query with no float caveats.
-    Late rows behind the stored tail: dropped and counted, as everywhere.
+    Late rows drop-and-count per the `_on_time` contract.
     """
-    chunks = [c for c in pdfs if len(c)]
-    if not chunks:
+    cut = _on_time(pdfs, state)
+    if cut is None:
         return
-    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-    ts = pdf["ts_us"].to_numpy()
-    eid = pdf["event_id"].to_numpy()
-    order = np.lexsort((eid, ts))
-    ts, eid = ts[order], eid[order]
+    c, prev, n_late = cut
+    new_ts, new_eid = c["ts_us"], c["event_id"]
     # cents arrive pre-computed JVM-side (see stream_zscore's select): both
     # the batch window op and this stream share the identical Spark round()
     # (BigDecimal HALF_UP on Double.toString), so no numpy re-derivation can
     # diverge on .5-boundary doubles like 0.49999999999999994*100.
-    xc = pdf["xc"].to_numpy()[order].astype(np.int64)
-    prev = tuple(state.get) if state.exists else None
-    n_late = int(prev[3]) if prev is not None else 0
-    h_ts = np.asarray(prev[0], dtype=np.int64) if prev is not None else np.empty(0, np.int64)
-    h_eid = np.asarray(prev[1], dtype=np.int64) if prev is not None else np.empty(0, np.int64)
-    h_xc = np.asarray(prev[2], dtype=np.int64) if prev is not None else np.empty(0, np.int64)
-    lo = 0
-    if len(h_ts):
-        i0 = int(np.searchsorted(ts, h_ts[-1], "left"))
-        i1 = int(np.searchsorted(ts, h_ts[-1], "right"))
-        lo = i0 + int(np.searchsorted(eid[i0:i1], h_eid[-1], "right"))
-        n_late += lo
-    new_ts, new_eid = ts[lo:], eid[lo:]
-    new_xc = xc[lo:]
+    new_xc = c["xc"].astype(np.int64)
+    h_ts, h_eid, h_xc = (
+        np.asarray(f, dtype=np.int64)
+        for f in (prev[:3] if prev is not None else ((), (), ()))
+    )
     full_ts = np.concatenate([h_ts, new_ts])
     full_eid = np.concatenate([h_eid, new_eid])
     full_xc = np.concatenate([h_xc, new_xc])
@@ -819,8 +826,6 @@ def _zscore_fn(
             n_late,
         )
     )
-    if not len(new_xc):
-        return
     off = len(h_xc)
     # trailing-frame integer sums via cumsum differences (exact in int64)
     c1 = np.concatenate([[0], np.cumsum(full_xc)])
@@ -834,13 +839,16 @@ def _zscore_fn(
     var = s2 / n - mean * mean
     with np.errstate(invalid="ignore", divide="ignore"):
         z = np.where(var > 0, (new_xc.astype(np.float64) - mean) / np.sqrt(var), np.nan)
-    uid = pdf["user_id"].to_numpy()[order][lo:]
-    etype = pdf["event_type"].to_numpy()[order][lo:]
     # NaN must surface as SQL NULL (the batch op's zero-variance case), not
     # as a double NaN — object dtype makes Arrow emit nulls
     zcol = pd.Series(z).astype(object).where(pd.notna(pd.Series(z)), None)
     yield pd.DataFrame(
-        {"user_id": uid, "event_type": etype, "event_id": new_eid, "z": zcol}
+        {
+            "user_id": c["user_id"],
+            "event_type": c["event_type"],
+            "event_id": new_eid,
+            "z": zcol,
+        }
     )
 
 
@@ -867,21 +875,14 @@ def stream_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     and counted in state, never re-scored — pinned by
     `test_stream_zscore_carries_history_and_drops_late`."""
     s = events_stream(spark, sf_dir)
-    out = (
+    out = _stateful_drain(
         s.select(
             "user_id", "event_type", "ts_us", "event_id", cents("value").alias("xc")
-        )
-        .groupBy("user_id", "event_type")
-        .applyInPandasWithState(
-            _zscore_fn,
-            outputStructType=_ZS_OUT,
-            stateStructType=_ZS_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        ),
+        ("user_id", "event_type"), _zscore_fn, _ZS_OUT, _ZS_STATE,
     )
     z = F.col("z")
-    return _drain(out, "append", partitions=16).select(
+    return out.select(
         "event_id",
         "user_id",
         "event_type",
@@ -972,18 +973,10 @@ def stream_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark needed) — pinned by
     `test_stream_quantile_merges_state_across_batches`."""
     s = events_stream(spark, sf_dir)
-    out = (
-        s.select("event_type", "value")
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _quantile_fn,
-            outputStructType=_QS_OUT,
-            stateStructType=_QS_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    drained = _stateful_drain(
+        s.select("event_type", "value"),
+        ("event_type",), _quantile_fn, _QS_OUT, _QS_STATE, "update",
     )
-    drained = _drain(out, "update", partitions=16)
     # no JVM-side re-round (r12): the state fn emits 1e-4-grid-exact
     # doubles already — round(grid/1e4, 4) would be a no-op at best and
     # a shortest-repr hazard at worst
@@ -1005,11 +998,10 @@ def stream_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming view of the documents table — the landing-directory shape of
     a continuously-ingesting corpus (file source, explicit schema taken from
-    the memoized batch handle, so no extra footer read; nanosAsLong set like
-    every other loader in case documents ever carries ns timestamps)."""
+    the memoized batch handle, so no extra footer read; `tables.load` has
+    already set nanosAsLong on the session the stream reads with)."""
     from kdb_spark.tables import load
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir.rstrip('/')}/documents.parquet"
     schema = load(spark, sf_dir, "documents").schema
     return spark.readStream.schema(schema).parquet(_staged_dir(path))
@@ -1180,18 +1172,10 @@ def stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     dashboard serves. Final view = each key's last emission (max n_seen),
     which after an AvailableNow drain equals the batch answer (oracle)."""
     s = events_stream(spark, sf_dir)
-    top = (
-        s.select("event_type", "user_id")
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _topk_fn,
-            outputStructType=_TOPK_OUT,
-            stateStructType=_TOPK_STATE,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    out = _stateful_drain(
+        s.select("event_type", "user_id"),
+        ("event_type",), _topk_fn, _TOPK_OUT, _TOPK_STATE, "update",
     )
-    out = _drain(top, "update", partitions=16)
     last = Window.partitionBy("event_type")
     return (
         out.withColumn("mx", F.max("n_seen").over(last))
@@ -1516,29 +1500,14 @@ def _gap_fn(
     DuckDB oracle's HUGEINT device, no width limit. gap_s/max_gap_s take
     ONE int→double cast + one divide, the same two IEEE ops both engines
     run. Late rows (at/before the stored tail) are dropped and counted —
-    the `_delta_fn` contract; series heads emit nothing (a head has no
+    the `_on_time` contract; series heads emit nothing (a head has no
     gap), matching the batch lag() NULL row.
     """
-    chunks = [c for c in pdfs if len(c)]
-    if not chunks:
+    cut = _on_time(pdfs, state)
+    if cut is None:
         return
-    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-    ts = pdf["ts_us"].to_numpy()
-    eid = pdf["event_id"].to_numpy()
-    order = np.lexsort((eid, ts))
-    ts, eid = ts[order], eid[order]
-    prev = tuple(state.get) if state.exists else None
-    n_late = int(prev[5]) if prev is not None else 0
-    lo = 0
-    if prev is not None:
-        i0 = int(np.searchsorted(ts, prev[0], "left"))
-        i1 = int(np.searchsorted(ts, prev[0], "right"))
-        lo = i0 + int(np.searchsorted(eid[i0:i1], prev[1], "right"))
-        n_late += lo
-        if lo == len(ts):
-            state.update((prev[0], prev[1], prev[2], prev[3], prev[4], n_late))
-            return
-        ts, eid = ts[lo:], eid[lo:]
+    c, prev, n_late = cut
+    ts, eid = c["ts_us"], c["event_id"]
     # vectorized replay of the former per-row loop (guide §4.2): gaps are
     # diffs against the carried tail, the running stats are cumsum /
     # maximum.accumulate, and the rounding device reduces EXACTLY —
@@ -1591,18 +1560,10 @@ def stream_interarrival(spark: SparkSession, sf_dir: str) -> DataFrame:
     window form over the same data.
     """
     s = events_stream(spark, sf_dir)
-    out = (
-        s.select("user_id", "event_type", "ts_us", "event_id")
-        .groupBy("user_id", "event_type")
-        .applyInPandasWithState(
-            _gap_fn,
-            outputStructType=_GAP_OUT,
-            stateStructType=_GAP_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _stateful_drain(
+        s.select("user_id", "event_type", "ts_us", "event_id"),
+        ("user_id", "event_type"), _gap_fn, _GAP_OUT, _GAP_STATE,
     )
-    return _drain(out, "append", partitions=16)
 
 
 # ------------------------------------------ stateful recency feature
@@ -1645,32 +1606,15 @@ def _since_fn(
     the stored last-target timestamp; rows before the first purchase emit
     NULL, purchase rows emit 0 — the batch window contract verbatim. Late
     rows (at/before the stored tail) are dropped and counted per the
-    `_delta_fn` contract, so replayed history can't rewrite emitted
+    `_on_time` contract, so replayed history can't rewrite emitted
     features.
     """
-    chunks = [c for c in pdfs if len(c)]
-    if not chunks:
+    cut = _on_time(pdfs, state)
+    if cut is None:
         return
-    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-    ts = pdf["ts_us"].to_numpy()
-    eid = pdf["event_id"].to_numpy()
-    etype = pdf["event_type"].to_numpy()
-    order = np.lexsort((eid, ts))
-    ts, eid, etype = ts[order], eid[order], etype[order]
-    prev = tuple(state.get) if state.exists else None
-    n_late = int(prev[4]) if prev is not None else 0
-    if prev is not None:
-        i0 = int(np.searchsorted(ts, prev[0], "left"))
-        i1 = int(np.searchsorted(ts, prev[0], "right"))
-        lo = i0 + int(np.searchsorted(eid[i0:i1], prev[1], "right"))
-        n_late += lo
-        if lo == len(ts):
-            state.update((prev[0], prev[1], prev[2], prev[3], n_late))
-            return
-        ts, eid, etype = ts[lo:], eid[lo:], etype[lo:]
-        last_t, n_t = int(prev[2]), int(prev[3])
-    else:
-        last_t, n_t = -1, 0
+    c, prev, n_late = cut
+    ts, eid, etype = c["ts_us"], c["event_id"], c["event_type"]
+    last_t, n_t = (int(prev[2]), int(prev[3])) if prev is not None else (-1, 0)
     # vectorized replay (guide §4.2): the running purchase count is a
     # cumsum over the target mask, and the carried last-target timestamp
     # is a forward-fill — indices of target rows, maximum.accumulate, then
@@ -1710,18 +1654,10 @@ def stream_since_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     window's user-only partition key.
     """
     s = events_stream(spark, sf_dir)
-    out = (
-        s.select("event_id", "user_id", "event_type", "ts_us")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _since_fn,
-            outputStructType=_SINCE_OUT,
-            stateStructType=_SINCE_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+    return _stateful_drain(
+        s.select("event_id", "user_id", "event_type", "ts_us"),
+        ("user_id",), _since_fn, _SINCE_OUT, _SINCE_STATE,
     )
-    return _drain(out, "append", partitions=16)
 
 
 def stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1798,29 +1734,14 @@ def _dd_fn(
     drawdown fraction — the LIVE form of `win_drawdown` (whose running
     max this replays incrementally; the device grid runs in Python ints,
     bit-identical to the batch DIV form). Late rows drop-and-count per
-    the `_delta_fn` contract.
+    the `_on_time` contract.
     """
-    chunks = [c for c in pdfs if len(c)]
-    if not chunks:
+    cut = _on_time(pdfs, state)
+    if cut is None:
         return
-    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-    ts = pdf["ts_us"].to_numpy()
-    eid = pdf["event_id"].to_numpy()
-    cs = pdf["c"].to_numpy()
-    order = np.lexsort((eid, ts))
-    ts, eid, cs = ts[order], eid[order], cs[order]
-    prev = tuple(state.get) if state.exists else None
-    n_late = int(prev[3]) if prev is not None else 0
+    c, prev, n_late = cut
+    ts, eid, cs = c["ts_us"], c["event_id"], c["c"]
     peak = int(prev[2]) if prev is not None else None
-    if prev is not None:
-        i0 = int(np.searchsorted(ts, prev[0], "left"))
-        i1 = int(np.searchsorted(ts, prev[0], "right"))
-        lo = i0 + int(np.searchsorted(eid[i0:i1], prev[1], "right"))
-        n_late += lo
-        if lo == len(ts):
-            state.update((prev[0], prev[1], peak, n_late))
-            return
-        ts, eid, cs = ts[lo:], eid[lo:], cs[lo:]
     # vectorized replay (guide §4.2): running peak is maximum.accumulate
     # (seeded with the carried peak), and the integer DIV device runs
     # elementwise in int64 — 2e6·(peak−c) is bounded by 2e6·|cents|,
@@ -1854,21 +1775,13 @@ def stream_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     max and integer DIV device this replays incrementally in O(1) state —
     two timestamps + one peak + a late counter)."""
     s = events_stream(spark, sf_dir)
-    out = (
+    return _stateful_drain(
         s.select(
             "user_id", "event_type", "ts_us", "event_id",
             cents("value").alias("c"),
-        )
-        .groupBy("user_id", "event_type")
-        .applyInPandasWithState(
-            _dd_fn,
-            outputStructType=_DD_OUT,
-            stateStructType=_DD_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        ),
+        ("user_id", "event_type"), _dd_fn, _DD_OUT, _DD_STATE,
     )
-    return _drain(out, "append", partitions=16)
 
 
 # --------------------------------------------------- day-close roll emitter
@@ -1910,29 +1823,14 @@ def _day_roll_fn(
     close. The live form of `win_gap_open`: identical integers, but a
     day is only published once it can never change — so each series'
     currently-open day is withheld, exactly the append-mode discipline.
-    Late rows drop-and-count per the `_delta_fn` contract.
+    Late rows drop-and-count per the `_on_time` contract.
     """
-    chunks = [c for c in pdfs if len(c)]
-    if not chunks:
+    cut = _on_time(pdfs, state)
+    if cut is None:
         return
-    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-    ts = pdf["ts_us"].to_numpy()
-    eid = pdf["event_id"].to_numpy()
-    cs = pdf["c"].to_numpy()
-    dy = pdf["day"].to_numpy()
-    order = np.lexsort((eid, ts))
-    ts, eid, cs, dy = ts[order], eid[order], cs[order], dy[order]
-    prev = tuple(state.get) if state.exists else None
-    n_late = int(prev[7]) if prev is not None else 0
+    c, prev, n_late = cut
+    ts, eid, cs, dy = c["ts_us"], c["event_id"], c["c"], c["day"]
     if prev is not None:
-        i0 = int(np.searchsorted(ts, prev[0], "left"))
-        i1 = int(np.searchsorted(ts, prev[0], "right"))
-        lo = i0 + int(np.searchsorted(eid[i0:i1], prev[1], "right"))
-        n_late += lo
-        if lo == len(ts):
-            state.update(prev[:7] + (n_late,))
-            return
-        ts, eid, cs, dy = ts[lo:], eid[lo:], cs[lo:], dy[lo:]
         cur_day, open_c, close_c, n, prev_close = (
             int(prev[2]), int(prev[3]), int(prev[4]), int(prev[5]),
             prev[6],
@@ -1999,7 +1897,7 @@ def stream_day_roll(spark: SparkSession, sf_dir: str) -> DataFrame:
     stateful op here.
     """
     s = events_stream(spark, sf_dir)
-    out = (
+    return _stateful_drain(
         s.select(
             "user_id",
             "event_type",
@@ -2007,17 +1905,9 @@ def stream_day_roll(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
             cents("value").alias("c"),
             F.expr(f"ts_us div {DAY_US}").alias("day"),
-        )
-        .groupBy("user_id", "event_type")
-        .applyInPandasWithState(
-            _day_roll_fn,
-            outputStructType=_DR_OUT,
-            stateStructType=_DR_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        ),
+        ("user_id", "event_type"), _day_roll_fn, _DR_OUT, _DR_STATE,
     )
-    return _drain(out, "append", partitions=16)
 
 
 # ------------------------------------------------------- peak-age monitor
@@ -2052,29 +1942,14 @@ def _peak_age_fn(
     """Emit every on-time row with the running peak, its timestamp, and
     the µs age — the LIVE form of `win_peak_age` with the identical
     latest-wins re-touch rule (c >= peak moves the clock), O(1) state.
-    Late rows drop-and-count per the `_delta_fn` contract."""
-    chunks = [c for c in pdfs if len(c)]
-    if not chunks:
+    Late rows drop-and-count per the `_on_time` contract."""
+    cut = _on_time(pdfs, state)
+    if cut is None:
         return
-    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-    ts = pdf["ts_us"].to_numpy()
-    eid = pdf["event_id"].to_numpy()
-    cs = pdf["c"].to_numpy()
-    order = np.lexsort((eid, ts))
-    ts, eid, cs = ts[order], eid[order], cs[order]
-    prev = tuple(state.get) if state.exists else None
-    n_late = int(prev[4]) if prev is not None else 0
+    c, prev, n_late = cut
+    ts, eid, cs = c["ts_us"], c["event_id"], c["c"]
     peak_c = int(prev[2]) if prev is not None else None
     peak_ts = int(prev[3]) if prev is not None else None
-    if prev is not None:
-        i0 = int(np.searchsorted(ts, prev[0], "left"))
-        i1 = int(np.searchsorted(ts, prev[0], "right"))
-        lo = i0 + int(np.searchsorted(eid[i0:i1], prev[1], "right"))
-        n_late += lo
-        if lo == len(ts):
-            state.update((prev[0], prev[1], peak_c, peak_ts, n_late))
-            return
-        ts, eid, cs = ts[lo:], eid[lo:], cs[lo:]
     # vectorized replay (guide §4.2): the running peak is
     # maximum.accumulate; a row re-touches the clock iff its cents reach
     # the peak BEFORE it (c >= prev running peak, the latest-wins rule),
@@ -2110,21 +1985,13 @@ def stream_peak_age(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie is `c >= peak`, identical to lexicographic struct max with the
     later timestamp winning on equal cents)."""
     s = events_stream(spark, sf_dir)
-    out = (
+    return _stateful_drain(
         s.select(
             "user_id", "event_type", "ts_us", "event_id",
             cents("value").alias("c"),
-        )
-        .groupBy("user_id", "event_type")
-        .applyInPandasWithState(
-            _peak_age_fn,
-            outputStructType=_PA_OUT,
-            stateStructType=_PA_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        ),
+        ("user_id", "event_type"), _peak_age_fn, _PA_OUT, _PA_STATE,
     )
-    return _drain(out, "append", partitions=16)
 
 
 # -------------------------------------------------- live last-touch credit
@@ -2160,33 +2027,14 @@ def _attrib_fn(
     the LIVE form of `agg_attribution`'s per-purchase core. Processing
     order is (ts, side, eid) with clicks as side 0, replaying the batch
     union-and-carry's same-microsecond rule (a click at the purchase's
-    exact timestamp DOES get the credit). Late rows drop-and-count."""
-    chunks = [c for c in pdfs if len(c)]
-    if not chunks:
+    exact timestamp DOES get the credit). Late rows drop-and-count per
+    the `_on_time` contract, on that same (ts, side, eid) order."""
+    cut = _on_time(pdfs, state, ("ts_us", "side", "event_id"))
+    if cut is None:
         return
-    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-    ts = pdf["ts_us"].to_numpy()
-    eid = pdf["event_id"].to_numpy()
-    side = pdf["side"].to_numpy()
-    order = np.lexsort((eid, side, ts))
-    ts, eid, side = ts[order], eid[order], side[order]
-    prev = tuple(state.get) if state.exists else None
-    n_late = int(prev[4]) if prev is not None else 0
+    c, prev, n_late = cut
+    ts, eid, side = c["ts_us"], c["event_id"], c["side"]
     last_click = prev[3] if prev is not None else None
-    if prev is not None:
-        # three-level searchsorted on the (ts, side, eid) lex order — the
-        # former tuple-compare scan walked every late row in Python
-        t0, s0, e0 = int(prev[0]), int(prev[1]), int(prev[2])
-        i0 = int(np.searchsorted(ts, t0, "left"))
-        i1 = int(np.searchsorted(ts, t0, "right"))
-        j0 = i0 + int(np.searchsorted(side[i0:i1], s0, "left"))
-        j1 = i0 + int(np.searchsorted(side[i0:i1], s0, "right"))
-        lo = j0 + int(np.searchsorted(eid[j0:j1], e0, "right"))
-        n_late += lo
-        if lo == len(ts):
-            state.update((t0, s0, e0, last_click, n_late))
-            return
-        ts, eid, side = ts[lo:], eid[lo:], side[lo:]
     # vectorized replay (guide §4.2): the carried click timestamp is a
     # forward-fill over click rows (index-gather device); only purchase
     # rows publish, with the 7-day window test done elementwise.
@@ -2201,20 +2049,16 @@ def _attrib_fn(
     else:
         lc_val = np.where(has, lc, np.int64(last_click))
         lc_has = np.ones(m, dtype=bool)
-    p = ~is_c
-    if not p.any():
-        state.update(
-            (int(ts[-1]), int(side[-1]), int(eid[-1]),
-             int(lc_val[-1]) if bool(lc_has[-1]) else None, n_late)
-        )
-        return
-    ok = lc_has[p] & (ts[p] - lc_val[p] <= _AT_WINDOW_US)
-    lc_out = lc_val[p].astype(object)
-    lc_out[~lc_has[p]] = None
     state.update(
         (int(ts[-1]), int(side[-1]), int(eid[-1]),
          int(lc_val[-1]) if bool(lc_has[-1]) else None, n_late)
     )
+    p = ~is_c
+    if not p.any():
+        return
+    ok = lc_has[p] & (ts[p] - lc_val[p] <= _AT_WINDOW_US)
+    lc_out = lc_val[p].astype(object)
+    lc_out[~lc_has[p]] = None
     (k_user,) = key
     np_p = int(p.sum())
     yield pd.DataFrame(
@@ -2234,7 +2078,7 @@ def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     carried click timestamp), 7-day lookback, per-purchase emission so
     the batch union-and-carry SQL replays it row for row."""
     s = events_stream(spark, sf_dir)
-    out = (
+    clicks_buys = (
         s.filter(F.col("event_type").isin("click", "purchase"))
         .select(
             "user_id",
@@ -2244,16 +2088,10 @@ def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("side"),
         )
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _attrib_fn,
-            outputStructType=_AT_OUT,
-            stateStructType=_AT_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
     )
-    return _drain(out, "append", partitions=16)
+    return _stateful_drain(
+        clicks_buys, ("user_id",), _attrib_fn, _AT_OUT, _AT_STATE
+    )
 
 
 # ------------------------------------------------------- cumulative VWAP
@@ -2290,31 +2128,14 @@ def _vwap_fn(
     cumulative VWAP (Σ price·vol / Σ vol in unbounded Python ints — the
     grid is bit-identical to the batch HUGEINT window form). Zero-volume
     prefix (Σvol = 0) emits null. Late rows drop-and-count per the
-    `_delta_fn` contract.
+    `_on_time` contract.
     """
-    chunks = [c for c in pdfs if len(c)]
-    if not chunks:
+    cut = _on_time(pdfs, state)
+    if cut is None:
         return
-    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-    ts = pdf["ts_us"].to_numpy()
-    eid = pdf["event_id"].to_numpy()
-    cs = pdf["c"].to_numpy()
-    vol = pdf["vol"].to_numpy()
-    order = np.lexsort((eid, ts))
-    ts, eid, cs, vol = ts[order], eid[order], cs[order], vol[order]
-    prev = tuple(state.get) if state.exists else None
-    n_late = int(prev[4]) if prev is not None else 0
-    spv = int(prev[2]) if prev is not None else 0
-    sv = int(prev[3]) if prev is not None else 0
-    if prev is not None:
-        i0 = int(np.searchsorted(ts, prev[0], "left"))
-        i1 = int(np.searchsorted(ts, prev[0], "right"))
-        lo = i0 + int(np.searchsorted(eid[i0:i1], prev[1], "right"))
-        n_late += lo
-        if lo == len(ts):
-            state.update((prev[0], prev[1], str(spv), sv, n_late))
-            return
-        ts, eid, cs, vol = ts[lo:], eid[lo:], cs[lo:], vol[lo:]
+    c, prev, n_late = cut
+    ts, eid, cs, vol = c["ts_us"], c["event_id"], c["c"], c["vol"]
+    spv, sv = (int(prev[2]), int(prev[3])) if prev is not None else (0, 0)
     # Vectorized replay (guide §4.2). The running sums are int64 cumsums;
     # the rounding device would overflow int64 as written (2e6·Σpv), so it
     # runs in the divmod-decomposed form
@@ -2324,8 +2145,7 @@ def _vwap_fn(
     # Σvol < 4.6e10. Past those bounds (the 1e9-row tape the state's
     # string Σ exists for) the exact Python-int loop below takes over.
     m = len(ts)
-    mx_c = int(np.abs(cs).max()) if m else 0
-    mx_v = int(np.abs(vol).max()) if m else 0
+    mx_c, mx_v = int(np.abs(cs).max()), int(np.abs(vol).max())
     sv_end = sv + int(np.sum(vol, dtype=object))
     safe = (
         abs(spv) + m * mx_c * mx_v < 2**62
@@ -2378,21 +2198,13 @@ def stream_vwap(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row emission, so the batch cumulative-window SQL is the oracle.
     """
     s = events_stream(spark, sf_dir)
-    out = (
+    return _stateful_drain(
         s.select(
             "event_type", "ts_us", "event_id",
             cents("value").alias("c"),
             F.coalesce(
                 F.get_json_object("props", "$.k").cast("long"), F.lit(0)
             ).alias("vol"),
-        )
-        .groupBy("event_type")
-        .applyInPandasWithState(
-            _vwap_fn,
-            outputStructType=_VW_OUT,
-            stateStructType=_VW_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
+        ),
+        ("event_type",), _vwap_fn, _VW_OUT, _VW_STATE,
     )
-    return _drain(out, "append", partitions=16)

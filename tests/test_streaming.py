@@ -1121,3 +1121,70 @@ def test_vwap_fn_vector_and_bigint_paths_agree():
     d = 100 * sv
     assert r2["vwap"][0] == float((2_000_000 * spv + d) // (2 * d)) / 1e6
     assert st2.get[2] == str(spv) and st2.get[3] == sv
+
+
+@pytest.mark.parametrize(
+    "fn, key, order",
+    [
+        (sm._delta_fn, (1, "a"), None),
+        (sm._ewma_fn, (1, "a"), None),
+        (sm._zscore_fn, (1, "a"), None),
+        (sm._gap_fn, (1, "a"), None),
+        (sm._since_fn, (1,), None),
+        (sm._dd_fn, (1, "a"), None),
+        (sm._day_roll_fn, (1, "a"), None),
+        (sm._peak_age_fn, (1, "a"), None),
+        (sm._attrib_fn, (1,), ("ts_us", "side", "event_id")),
+        (sm._vwap_fn, ("a",), None),
+    ],
+    ids=lambda v: getattr(v, "__name__", None),
+)
+def test_late_rows_drop_and_count(fn, key, order):
+    """Every Python-stateful series operator shares one late-row cut: rows
+    at or behind the stored tail — including a same-µs re-delivery of the
+    tail itself — are dropped and counted in `n_late`, the new tail is the
+    last on-time row, and an all-late batch emits nothing and leaves the
+    state untouched apart from `n_late`."""
+    import pandas as pd
+
+    order = order or ("ts_us", "event_id")
+
+    def batch(*ts_eid):
+        n = len(ts_eid)
+        cents_ = [100 + 7 * i for i in range(n)]
+        return pd.DataFrame(
+            {
+                "user_id": [1] * n,
+                "event_type": ["a"] * n,
+                "ts_us": [t for t, _ in ts_eid],
+                "event_id": [e for _, e in ts_eid],
+                "value": [c / 100 for c in cents_],
+                "xc": cents_,
+                "c": cents_,
+                "day": [t // DAY_US for t, _ in ts_eid],
+                "side": [1] * n,
+                "vol": [1] * n,
+            }
+        )
+
+    def tail(state):
+        fields = state[: len(order)]
+        return tuple(f[-1] if isinstance(f, list) else f for f in fields)
+
+    def run(df):
+        return list(fn(key, iter([df]), st))
+
+    st = _FnState()
+    run(batch((100, 5), (200, 10)))
+    assert tail(st.get) == ((200, 1, 10) if len(order) == 3 else (200, 10))
+    n0 = st.get[-1]
+
+    # behind the tail, the tail re-delivered, a same-µs later id, a later row
+    run(batch((150, 20), (200, 10), (200, 11), (300, 12)))
+    assert st.get[-1] == n0 + 2
+    assert tail(st.get) == ((300, 1, 12) if len(order) == 3 else (300, 12))
+
+    before = st.get
+    assert run(batch((100, 1), (300, 12))) == []
+    assert st.get[:-1] == before[:-1]
+    assert st.get[-1] == before[-1] + 2

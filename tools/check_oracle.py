@@ -7,17 +7,26 @@ and order-insensitive values — BIT-EXACT, including floats (the driver
 hashes raw values, so a 1-ulp drift is a driver FAIL; --tol exists only
 for debugging a divergence).
 
-Usage: python tools/check_oracle.py [--sf /root/testdata/sf0.01] [names...]
+With ``--rows N`` a failing key also prints the md5-multiset difference
+of its canonical rows (floats in full repr, so 1-ulp drift shows) and the
+first N differing rows of each engine, to bisect the divergence. Zero
+difference on a key that fails an outside hash gate means the divergence
+is in the environment; sweep ``--shuffle`` (e.g. 3, 32, 200) to rule the
+Spark plan in or out.
+
+Usage: python tools/check_oracle.py [--sf DIR] [--rows N] [--shuffle N] [names...]
 """
 
 from __future__ import annotations
 
 import argparse
+import hashlib
 import math
 import struct
 import sys
 import time
 import traceback
+from collections import Counter
 
 sys.path.insert(0, ".")
 
@@ -43,6 +52,46 @@ def normalize(df, cols):
     df = df[cols]
     rows = [tuple(_norm_val(v) for v in t) for t in df.itertuples(index=False)]
     return sorted(rows, key=lambda r: tuple((x is None, str(x)) for x in r))
+
+
+def _canon_val(v):
+    if v is None or (isinstance(v, float) and math.isnan(v)):
+        return "NULL"
+    if isinstance(v, float):
+        return repr(v)  # repr round-trips doubles exactly
+    if isinstance(v, (list, tuple)) or (
+        hasattr(v, "__len__") and hasattr(v, "dtype")
+    ):
+        return "[" + ",".join(_canon_val(x) for x in v) + "]"
+    if hasattr(v, "item"):
+        return _canon_val(v.item())
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    return str(v)
+
+
+def row_diff(spdf, odf, cols, show: int) -> str:
+    """md5-multiset difference of the two engines' canonical rows, plus the
+    first ``show`` rows found on only one side."""
+    canon = {}
+    counts = []
+    for df in (spdf, odf):
+        c = Counter()
+        for t in df[cols].itertuples(index=False):
+            line = "|".join(_canon_val(v) for v in t)
+            h = hashlib.md5(line.encode()).hexdigest()
+            canon[h] = line
+            c[h] += 1
+        counts.append(c)
+    only_s, only_o = counts[0] - counts[1], counts[1] - counts[0]
+    lines = [
+        f"  rows_only_in_spark={sum(only_s.values())} "
+        f"rows_only_in_oracle={sum(only_o.values())}"
+    ]
+    for side, only in (("spark", only_s), ("oracle", only_o)):
+        lines.append(f"  --- first differing rows, {side} side ---")
+        lines += [f"    {canon[h]}" for h in list(only)[:show]]
+    return "\n".join(lines)
 
 
 def values_equal(a, b, tol: float = 0.0):
@@ -75,6 +124,8 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
     ap.add_argument("--tol", type=float, default=0.0, help="debug-only tolerance; green requires exact")
+    ap.add_argument("--rows", type=int, default=0, help="on a failing key, print its md5 row diff and first N differing rows")
+    ap.add_argument("--shuffle", type=int, default=None, help="spark.sql.shuffle.partitions for the run")
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
@@ -85,6 +136,8 @@ def main() -> int:
     from kdb_spark.session import get_spark
 
     spark = get_spark("check_oracle", cpus=8, driver_memory="8g")
+    if args.shuffle:
+        spark.conf.set("spark.sql.shuffle.partitions", str(args.shuffle))
 
     con = duckdb.connect()
     for t in (
@@ -154,6 +207,8 @@ def main() -> int:
             continue
         if len(spdf) != len(odf):
             print(f"FAIL {name}: rows {len(spdf)} != {len(odf)}")
+            if args.rows:
+                print(row_diff(spdf, odf, scols, args.rows))
             n_fail += 1
             continue
         # dtype-mismatch hazard (r15): pandas surfaces DuckDB HUGEINT (any
@@ -184,6 +239,8 @@ def main() -> int:
                 break
         if bad:
             print(f"FAIL {name}: first diff at sorted row {bad[0]}:\n  spark: {bad[1]}\n  duck : {bad[2]}")
+            if args.rows:
+                print(row_diff(spdf, odf, scols, args.rows))
             n_fail += 1
         else:
             print(f"PASS {name}: {len(spdf)} rows ({time.time()-t0:.1f}s)")
