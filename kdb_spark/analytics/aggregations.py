@@ -8,6 +8,7 @@ order-independent and oracle-exact at any scale.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -714,12 +715,13 @@ def udaf_max_gap(events: DataFrame, event_type: str | None = None) -> DataFrame:
     if event_type is not None:
         events = events.filter(F.col("event_type") == event_type)
     import numpy as np
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
+    from pyspark.sql.functions import pandas_udf
 
-    # explicit functionType: the module uses `from __future__ import
-    # annotations`, which stringifies type hints beyond the resolver
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def max_gap(ts):
+    # Series -> scalar hints make these grouped-agg UDFs; the hints are
+    # strings under `from __future__ import annotations`, resolved against
+    # the module globals, so pandas is imported at module level
+    @pandas_udf("long")
+    def max_gap(ts: pd.Series) -> int:
         a = np.sort(ts.to_numpy())
         if len(a) < 2:
             return None
@@ -727,8 +729,8 @@ def udaf_max_gap(events: DataFrame, event_type: str | None = None) -> DataFrame:
 
     # Spark disallows mixing a group-agg pandas UDF with JVM aggregates in
     # one agg, so the row count is a second pandas aggregate
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def n_rows(ts):
+    @pandas_udf("long")
+    def n_rows(ts: pd.Series) -> int:
         return len(ts)
 
     return (

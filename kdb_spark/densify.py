@@ -1,4 +1,4 @@
-"""Spine-join densification — the one genuinely custom composition.
+"""Spine-join densification for multi-series reads, and the read-width rule.
 
 The reference returns *dense* range-scan results by construction: records are
 preallocated zero-filled slot arrays, so a range read is a contiguous slice
@@ -7,6 +7,12 @@ with gaps physically present as zero bytes (`dblock/dblock.go:220-231`,
 reconstructed at query time:
 
     spine(start, end, res)  LEFT JOIN  data ON slot  →  coalesce(val, zero)
+
+In the store this join now serves ``find`` only: its output holds one grid
+per series present, which is not known until the scan runs. The store's
+``get`` (like ``kernel.get_dense``) needs no join: it unions ``time_spine``'s
+slots as zero sentinels into its last-write-wins aggregate (see store.py).
+``read_partitions`` sizes both the spine and that aggregate.
 
 Scale notes (100 TB posture, SURVEY.md §7):
 - The single-series spine is generated *distributed* with ``spark.range`` (a
@@ -27,6 +33,22 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
+SLOTS_PER_PARTITION = 65536
+
+
+def read_partitions(spark: SparkSession, n_slots: int, n_bytes: int = 0) -> int:
+    """Partitions for a read of ``n_slots`` slots over ``n_bytes`` of part
+    files: one per 65,536 slots or per ``spark.sql.files.maxPartitionBytes``
+    of input, whichever needs more, at least one and at most the cluster's
+    default parallelism. A few-thousand-slot read over small buckets is one
+    partition, so it pays no full-width task overhead."""
+    n = -(-n_slots // SLOTS_PER_PARTITION)
+    if n_bytes:
+        per = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+        n = max(n, -(-n_bytes // per))
+    return max(1, min(spark.sparkContext.defaultParallelism, n))
+
+
 def time_spine(
     spark: SparkSession,
     start: int,
@@ -38,15 +60,12 @@ def time_spine(
 
     Mirrors the result-length contract ``(end-start)/Resolution``
     (`dbase/dbase.go:183-184`). ``spark.range`` is distributed and splits the
-    id space across executors, so a 10^9-slot spine is fine — partition
-    count scales with the slot count (~64k slots per task, capped at the
-    cluster's default parallelism) instead of always paying full-width task
-    overhead for a few-thousand-row spine.
+    id space across executors, so a 10^9-slot spine is fine; its partition
+    count is ``read_partitions`` of the slot count.
     """
     n = max(0, (end - start) // resolution)
-    parts = max(1, min(spark.sparkContext.defaultParallelism, (n + 65535) // 65536))
     # one SQL expression: each Column call is a py4j round trip
-    return spark.range(0, n, 1, parts).selectExpr(
+    return spark.range(0, n, 1, read_partitions(spark, n)).selectExpr(
         f"CAST({start} + id * {resolution} AS BIGINT) AS {ts_col}"
     )
 

@@ -26,15 +26,19 @@ Semantics reproduced exactly (golden-tested in tests/test_store.py):
   ``max_by(payload, ingest_seq)``
 - retention drops whole buckets, refuses hot ones (`dbase/dbase.go:323-364`)
 
-Scale posture: reads never collect; the dense grid is produced by a
-distributed spine (see densify.py); writes append partitioned parquet (on a
-cluster this would be exactly the same code against object storage, with the
-hot path fed by Structured Streaming — kdb_spark/streaming.py). No verb pays
-a fixed Spark cost unrelated to its data: reads take their schema from the
-config (checked once against a part-file footer at open) and list only the
-bucket dirs their range touches, so building a read DataFrame launches no
-job; tuple puts reach the JVM as one Arrow table, so the write job is the
-batch's only job and runs no Python worker.
+Scale posture: reads never collect. ``get`` is one last-write-wins aggregate
+over the range's rows and a distributed slot spine of zero sentinels, on
+``read_partitions`` partitions (see densify.py): a narrow read over small
+buckets is one partition and runs as one Spark job, a wide one stays
+distributed. ``find`` joins its rows onto a map-side per-series grid.
+Writes append partitioned parquet (on a cluster this would be exactly the
+same code against object storage, with the hot path fed by Structured
+Streaming — kdb_spark/streaming.py). No verb pays a fixed Spark cost
+unrelated to its data: reads take their schema from the config (checked
+once against a part-file footer at open) and list only the bucket dirs their
+range touches, so building a read DataFrame launches no job; tuple puts
+reach the JVM as one Arrow table, so the write job is the batch's only job
+and runs no Python worker.
 """
 
 from __future__ import annotations
@@ -52,7 +56,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kdb_spark.config import StoreConfig
-from kdb_spark.densify import dense_grid, densify, time_spine
+from kdb_spark.densify import dense_grid, densify, read_partitions, time_spine
 from kdb_spark.errors import (
     ColdWriteError,
     FutureTimestampError,
@@ -487,11 +491,12 @@ class TimeSeriesStore:
 
     def _pruned(
         self, start: int, end: int, now: int, *, include_end_bucket: bool = False
-    ) -> DataFrame:
+    ) -> tuple[DataFrame, int]:
         """Rows of buckets overlapping [start, end) — the bucket loop
         (`dbase/dbase.go:177-188`) over the bucket dirs that hold data,
         served from the pinned hot tier where the range overlaps it. A tier
         with no bucket in range is left out of the plan, not unioned empty.
+        Also returns the bytes of those buckets' visible part files.
 
         ``include_end_bucket`` mirrors the reference's ``find`` loop bound
         ``t <= end - end%BucketDuration`` (`dbase/dbase.go:247,256`): when
@@ -509,27 +514,34 @@ class TimeSeriesStore:
         self._replay_pending_manifests()
         buckets = self._buckets()
         in_range = [b for b in buckets if b0 <= b <= b1]
+        n_bytes = sum(
+            e.stat().st_size
+            for b in in_range
+            for e in os.scandir(self._bucket_dir(b))
+            if not e.name.startswith(("_", "."))
+        )
         hot_min = cfg.hot_min_base(now)
         hot = None
         if in_range and in_range[-1] >= hot_min:
             hot = self._hot_window_df(now, buckets)
         if hot is None:
-            return self._read(in_range)
+            return self._read(in_range), n_bytes
         # cold tier from parquet, hot tier from the pinned cache; the two
         # partition sets are disjoint by construction
         hot = hot.filter(f"bucket_ts BETWEEN {b0} AND {b1}")
         cold = [b for b in in_range if b < hot_min]
-        return self._read(cold).unionByName(hot) if cold else hot
+        return (self._read(cold).unionByName(hot) if cold else hot), n_bytes
 
-    def _lww(self, df: DataFrame) -> DataFrame:
-        """Last-write-wins visibility per (series, slot) (`dblock/dblock.go:198-205`).
+    @staticmethod
+    def _lww(df: DataFrame, *keys: str) -> DataFrame:
+        """Last-write-wins visibility per ``keys`` (`dblock/dblock.go:198-205`):
+        the (series, slot) in ``find``, the slot in ``get``.
 
         Rank = (batch seq, intra-batch row seq): later ``put_batch`` beats
         earlier; within a batch the later row (partition-major order) wins,
         matching the reference's sequential ``Put`` loop.
         """
-        tag_cols = list(self.config.tag_cols)
-        return df.groupBy(*tag_cols, "ts").agg(
+        return df.groupBy(*keys).agg(
             F.expr("max_by(payload, struct(ingest_seq, row_seq)) AS payload")
         )
 
@@ -545,7 +557,19 @@ class TimeSeriesStore:
 
         Returns DataFrame (ts LONG, payload BINARY) with exactly
         ``(end-start)/resolution`` rows after flooring, end-exclusive,
-        zero-filled. Never an error for absent series/buckets.
+        zero-filled, in ``ts`` order. Never an error for absent
+        series/buckets.
+
+        Plan: the series' rows in range, unioned with one zero-payload
+        sentinel per slot ranked ``(-1, -1)`` below every real write, then
+        ONE ``groupBy(ts)`` + ``max_by`` that does last-write-wins and
+        zero-fill together, then ``orderBy(ts)``. The union is coalesced to
+        ``k = read_partitions(slots, bytes)`` partitions, where ``bytes`` is
+        the visible part-file size of the in-range buckets. At ``k = 1`` one
+        partition already satisfies both the aggregate and the sort, so no
+        exchange is planned and the read runs as one job (two when it first
+        pins the hot tier); at ``k > 1`` the planner adds the hash and range
+        exchanges, so wide ranges and large buckets stay distributed.
 
         ``as_of``: snapshot read — only rows from batches with
         ``ingest_seq <= as_of`` are visible, so a later LWW overwrite is
@@ -575,13 +599,14 @@ class TimeSeriesStore:
             cond = cond & (F.col(c) == v)
         if as_of is not None:
             cond = cond & F.expr(f"ingest_seq <= {int(as_of)}")
-        data = self._pruned(start, end, now).filter(cond)
-        lww = self._lww(data).select("ts", "payload")
-        spine = time_spine(self.spark, start, end, cfg.resolution)
-        return densify(
-            spine, lww, on=["ts"], value_col="payload",
-            fill=F.lit(cfg.zero_payload),
-        ).orderBy("ts")
+        rows, n_bytes = self._pruned(start, end, now)
+        data = rows.filter(cond).select("ts", "payload", "ingest_seq", "row_seq")
+        slots = time_spine(self.spark, start, end, cfg.resolution).selectExpr(
+            "ts", f"X'{cfg.zero_payload.hex()}' AS payload",
+            "-1L AS ingest_seq", "-1L AS row_seq",
+        )
+        k = read_partitions(self.spark, (end - start) // cfg.resolution, n_bytes)
+        return self._lww(data.unionByName(slots).coalesce(k), "ts").orderBy("ts")
 
     def find(
         self,
@@ -614,12 +639,12 @@ class TimeSeriesStore:
         tag_cols = list(cfg.tag_cols)
         # Presence consults every bucket the reference's loop touches —
         # including the one whose base == end (dbase.go:247,256).
-        scanned = self._pruned(start, end, now, include_end_bucket=True)
+        scanned, _ = self._pruned(start, end, now, include_end_bucket=True)
         if conds:
             scanned = scanned.filter(functools.reduce(operator.and_, conds))
         series = scanned.select(*tag_cols).distinct()
         data = scanned.filter(f"ts >= {start} AND ts < {end}")
-        lww = self._lww(data)
+        lww = self._lww(data, *tag_cols, "ts")
         grid = dense_grid(series, start, end, cfg.resolution)
         return densify(
             grid, lww, on=[*tag_cols, "ts"], value_col="payload",

@@ -627,3 +627,107 @@ def test_reopen_accepts_int32_ingest_seq_files(store):
     reopened = TimeSeriesStore(store.spark, store.config)
     assert payloads(reopened.get(10990, 11010, ["a", "b", "c", "d"], now=NOW)) == [PA, P0]
     assert payloads(reopened.get(3030, 3040, ["a", "b", "c", "d"], now=NOW)) == [bytes([3, 0, 3, 0])]
+
+
+# ------------------------------------------------------------- one-job get
+
+
+def test_narrow_get_is_one_job(store):
+    """A get of at most 65,536 slots over small buckets is one partition:
+    its last-write-wins aggregate and its sort need no exchange, so it runs
+    one job over cold buckets and over the pinned hot tier, and at most two
+    when it first pins the hot tier after a put."""
+    seeded(store)
+
+    def n_jobs(start, end):
+        n, rows = _jobs(store.spark, store.get(start, end, ["a", "b", "c", "d"], now=NOW).collect)
+        assert [r["ts"] for r in rows] == list(range(start, end, 10))
+        return n
+
+    assert n_jobs(10980, 11010) <= 2  # the put dropped the hot tier
+    assert n_jobs(10980, 11010) == 1
+    assert n_jobs(3000, 3100) == 1
+    assert n_jobs(3000, 11010) == 1
+
+
+def test_read_width_follows_slots_and_bytes(store):
+    """One partition per 65,536 slots or per maxPartitionBytes of part
+    files, whichever needs more, capped at the default parallelism. Under a
+    small maxPartitionBytes a narrow get takes the distributed path and
+    still reads the same rows."""
+    from kdb_spark.densify import read_partitions
+
+    spark = store.spark
+    key = "spark.sql.files.maxPartitionBytes"
+    per = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    cap = spark.sparkContext.defaultParallelism
+    assert read_partitions(spark, 65_536, per) == 1
+    assert read_partitions(spark, 65_537) == min(2, cap)
+    assert read_partitions(spark, 10, per + 1) == min(2, cap) > 1
+    assert read_partitions(spark, 10, 100 * per) == cap
+
+    seeded(store)
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        n, rows = _jobs(spark, store.get(3020, 11010, ["a", "b", "c", "d"], now=NOW).collect)
+    finally:
+        spark.conf.set(key, old)
+    assert n > 1
+    want = {3030: bytes([3, 0, 3, 0]), 6060: bytes([6, 0, 6, 0]), 10990: PA}
+    assert [(r["ts"], bytes(r["payload"])) for r in rows] == [
+        (ts, want.get(ts, P0)) for ts in range(3020, 11010, 10)
+    ]
+
+
+def test_wide_get_matches_model(spark, tmp_path):
+    """A get wider than 65,536 slots (resolution 1, ~310k slots over four
+    buckets) is spread over several partitions; it still returns every slot
+    in ts order with last-write-wins across and within batches, also as of
+    an earlier batch. A get of exactly 65,536 slots is still one job."""
+    cfg = StoreConfig(
+        database_name="wide", data_path=str(tmp_path), index_depth=4,
+        payload_size=4, bucket_duration=100_000, resolution=1,
+    )
+    st = TimeSeriesStore(spark, cfg)
+    tags = ("a", "b", "c", "d")
+    p = [bytes([i, i, i, i]) for i in range(1, 9)]
+    batches = [  # (now, [(ts, payload)]) — each later write of a ts wins
+        (99_999, [(10, p[0]), (50_000, p[1]), (99_999, p[2]), (50_000, p[3])]),
+        (199_999, [(150_000, p[4]), (50_000, p[5])]),
+        (299_999, [(250_000, p[6]), (150_000, p[7])]),
+        (310_000, [(305_000, p[0]), (250_000, p[1])]),
+    ]
+    seqs = []
+    for now, rows in batches:
+        seqs.append(st.current_seq() + 1)
+        st.put_batch([(ts, *tags, pl) for ts, pl in rows], now=now)
+
+    def want(as_of):
+        cur = {}
+        for seq, (_, rows) in zip(seqs, batches):
+            if seq <= as_of:
+                cur.update(rows)
+        return [(ts, cur.get(ts, bytes(4))) for ts in range(0, 310_000)]
+
+    for as_of in (None, seqs[1]):
+        n, rows = _jobs(spark, st.get(0, 310_000, list(tags), now=310_000, as_of=as_of).collect)
+        assert n > 1
+        assert [(r["ts"], bytes(r["payload"])) for r in rows] == want(
+            seqs[-1] if as_of is None else as_of
+        )
+    n, rows = _jobs(spark, st.get(0, 65_536, list(tags), now=310_000).collect)
+    assert (n, len(rows)) == (1, 65_536)
+    st.close()
+
+
+def test_tags_with_quotes_round_trip(store):
+    """Tag values holding ' and \\ reach the read predicates as values, not
+    SQL text: get and a wildcard find read them back."""
+    odd = ["it's", "back\\slash", "c", "d'\\'"]
+    store.put_batch([(11000, *odd, PA), (11000, "it's", "b", "c", "d", PB)], now=NOW)
+    assert payloads(store.get(11000, 11020, odd, now=NOW)) == [PA, P0]
+    found = store.find(11000, 11010, ["it's", "", "c", ""], now=NOW).collect()
+    assert {(tuple(r[t] for t in store.config.tag_cols), bytes(r["payload"])) for r in found} == {
+        (tuple(odd), PA), (("it's", "b", "c", "d"), PB),
+    }
