@@ -1,18 +1,15 @@
-"""Spine-join densification for multi-series reads, and the read-width rule.
+"""Dense slot generation for range reads, and the read-width rule.
 
 The reference returns *dense* range-scan results by construction: records are
 preallocated zero-filled slot arrays, so a range read is a contiguous slice
 with gaps physically present as zero bytes (`dblock/dblock.go:220-231`,
 `dbase/dbase.go:75-81`). Spark stores sparse rows, so density is
-reconstructed at query time:
-
-    spine(start, end, res)  LEFT JOIN  data ON slot  →  coalesce(val, zero)
-
-In the store this join now serves ``find`` only: its output holds one grid
-per series present, which is not known until the scan runs. The store's
-``get`` (like ``kernel.get_dense``) needs no join: it unions ``time_spine``'s
-slots as zero sentinels into its last-write-wins aggregate (see store.py).
-``read_partitions`` sizes both the spine and that aggregate.
+reconstructed at query time from generated slots: ``time_spine`` (one
+series) and ``dense_grid`` (one grid per series row). The store's ``get``
+and ``find`` (like ``kernel.get_dense``) union those slots as zero sentinels
+into their last-write-wins aggregate, so no join is involved; the kernel's
+``find_dense`` and the gap-filling windows left-join their rows onto a grid.
+``read_partitions`` sizes both the spine and the store's aggregates.
 
 Scale notes (100 TB posture, SURVEY.md §7):
 - The single-series spine is generated *distributed* with ``spark.range`` (a
@@ -22,15 +19,11 @@ Scale notes (100 TB posture, SURVEY.md §7):
   ``explode(sequence(...))`` per series row (``dense_grid``) — no cross
   join, no broadcast, so the range width is unbounded (a spine crossJoin
   compiles to BroadcastNestedLoopJoin and caps the range at broadcast size).
-- The join key is the already-quantized slot value, so the gap-fill join is
-  a plain equi-join that AQE can turn into a broadcast join when the
-  filtered data side is small (the common case: one series × bounded range).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 
 SLOTS_PER_PARTITION = 65536
@@ -81,47 +74,22 @@ def dense_grid(
     """series × every slot in ``[start, end)`` — generated map-side.
 
     Two-level explode: each series row fans out to its slot chunks, each
-    chunk to ≤ ``chunk`` slots, so no single in-row array exceeds ``chunk``
-    elements and no join/broadcast is involved. A year of 1-second slots
-    (31M per series) is ~7.7k chunk rows per series, streamed through
-    whole-stage codegen.
+    chunk to ≤ ``chunk`` slots, so no in-row array exceeds ``chunk`` elements
+    and no join/broadcast is involved. A year of 1-second slots (31M per
+    series) is ~7.7k chunk rows per series, streamed through whole-stage
+    codegen.
     """
     n = max(0, (end - start) // resolution)
     if n == 0:
-        return series.withColumn(ts_col, F.lit(0).cast("long")).limit(0)
-    n_chunks = (n + chunk - 1) // chunk
+        return series.selectExpr("*", f"0L AS {ts_col}").limit(0)
     step = chunk * resolution
     return (
-        series.withColumn("_chunk", F.explode(F.sequence(F.lit(0), F.lit(n_chunks - 1))))
-        .withColumn(
-            ts_col,
-            F.explode(
-                F.sequence(
-                    F.lit(start) + F.col("_chunk") * F.lit(step),
-                    F.least(
-                        F.lit(start) + (F.col("_chunk") + 1) * F.lit(step),
-                        F.lit(end),
-                    )
-                    - F.lit(resolution),
-                    F.lit(resolution),
-                ).cast("array<long>")
-            ),
+        series.selectExpr("*", f"explode(sequence(0, {(n - 1) // chunk})) AS _chunk")
+        .selectExpr(
+            "*",
+            f"explode(sequence({start}L + _chunk * {step}L, "
+            f"least({start}L + (_chunk + 1) * {step}L, {end}L) - {resolution}L, "
+            f"{resolution}L)) AS {ts_col}",
         )
         .drop("_chunk")
     )
-
-
-def densify(
-    spine: DataFrame,
-    data: DataFrame,
-    on: list[str],
-    value_col: str,
-    fill: Column,
-) -> DataFrame:
-    """LEFT-JOIN ``data`` onto the grid/spine, filling gaps.
-
-    ``fill`` is the zero payload (`dbase/dbase.go:75-81`) — the reference's
-    "missing data is zero bytes, not null" contract.
-    """
-    out = spine.join(data, on=on, how="left")
-    return out.withColumn(value_col, F.coalesce(F.col(value_col), fill))

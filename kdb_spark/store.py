@@ -26,11 +26,12 @@ Semantics reproduced exactly (golden-tested in tests/test_store.py):
   ``max_by(payload, ingest_seq)``
 - retention drops whole buckets, refuses hot ones (`dbase/dbase.go:323-364`)
 
-Scale posture: reads never collect. ``get`` is one last-write-wins aggregate
-over the range's rows and a distributed slot spine of zero sentinels, on
-``read_partitions`` partitions (see densify.py): a narrow read over small
-buckets is one partition and runs as one Spark job, a wide one stays
-distributed. ``find`` joins its rows onto a map-side per-series grid.
+Scale posture: reads never collect. ``get`` and ``find`` are each one
+last-write-wins aggregate over the range's rows and generated zero-sentinel
+slots (a distributed spine for ``get``, a map-side grid per series present
+for ``find``), on ``read_partitions`` partitions (see densify.py): a narrow
+read over small buckets is one partition and runs as one Spark job, a wide
+one stays distributed. Both build their filters as SQL strings.
 Writes append partitioned parquet (on a cluster this would be exactly the
 same code against object storage, with the hot path fed by Structured
 Streaming — kdb_spark/streaming.py). No verb pays a fixed Spark cost
@@ -44,9 +45,7 @@ and runs no Python worker.
 from __future__ import annotations
 
 import fcntl
-import functools
 import json
-import operator
 import os
 import shutil
 from collections.abc import Iterable
@@ -56,7 +55,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kdb_spark.config import StoreConfig
-from kdb_spark.densify import dense_grid, densify, read_partitions, time_spine
+from kdb_spark.densify import dense_grid, read_partitions, time_spine
 from kdb_spark.errors import (
     ColdWriteError,
     FutureTimestampError,
@@ -534,16 +533,38 @@ class TimeSeriesStore:
 
     @staticmethod
     def _lww(df: DataFrame, *keys: str) -> DataFrame:
-        """Last-write-wins visibility per ``keys`` (`dblock/dblock.go:198-205`):
-        the (series, slot) in ``find``, the slot in ``get``.
+        """Last-write-wins visibility per ``keys`` (`dblock/dblock.go:198-205`),
+        in ``keys`` order: the (series, slot) in ``find``, the slot in ``get``.
 
         Rank = (batch seq, intra-batch row seq): later ``put_batch`` beats
         earlier; within a batch the later row (partition-major order) wins,
-        matching the reference's sequential ``Put`` loop.
+        matching the reference's sequential ``Put`` loop. ``df[k]`` is one
+        py4j call; a name string costs a dozen.
         """
-        return df.groupBy(*keys).agg(
+        out = df.groupBy(*(df[k] for k in keys)).agg(
             F.expr("max_by(payload, struct(ingest_seq, row_seq)) AS payload")
         )
+        return out.orderBy(*(out[k] for k in keys))
+
+    def _sentinel(self) -> list[str]:
+        """A gap-fill slot's zero payload, ranked below every real write."""
+        zero = self.config.zero_payload.hex()
+        return [f"X'{zero}' AS payload", "-1L AS ingest_seq", "-1L AS row_seq"]
+
+    @staticmethod
+    def _tag_pred(pairs: Iterable[tuple[str, str | None]], as_of: int | None) -> str:
+        """One SQL string (one py4j call): ``tag = value`` per pair, and the
+        ``as_of`` cut. A value goes in as ``CAST(X'<utf-8 hex>' AS STRING)``,
+        so no quoting is involved; it folds to a literal and reaches the
+        parquet scan as ``EqualTo(tag, value)``. A None value matches nothing.
+        """
+        conds = [
+            "FALSE" if v is None else f"{c} = CAST(X'{v.encode().hex()}' AS STRING)"
+            for c, v in pairs
+        ]
+        if as_of is not None:
+            conds.append(f"ingest_seq <= {int(as_of)}")
+        return " AND ".join(conds) or "TRUE"
 
     def get(
         self,
@@ -589,24 +610,21 @@ class TimeSeriesStore:
         # we follow the asserted contract (the stricter rule).
         if end < start or start > now or end > now:
             raise RangeError(f"invalid range [{start},{end}) vs now={now} (dbase.go:166-170)")
-        # A WILDCARD ("") tag in get() is not an error: the reference descends
-        # to a nonexistent index node → all-zero result; the equality filter
-        # below matches nothing, producing the same dense zero grid.
+        # A WILDCARD ("") or None tag in get() is not an error: the reference
+        # descends to a nonexistent index node → all-zero result; the tag
+        # predicate below matches nothing, producing the same dense zero grid.
         self._check_tags(tags)
 
-        cond = F.expr(f"ts >= {start} AND ts < {end}")
-        for c, v in zip(cfg.tag_cols, tags):
-            cond = cond & (F.col(c) == v)
-        if as_of is not None:
-            cond = cond & F.expr(f"ingest_seq <= {int(as_of)}")
         rows, n_bytes = self._pruned(start, end, now)
-        data = rows.filter(cond).select("ts", "payload", "ingest_seq", "row_seq")
+        pred = self._tag_pred(zip(cfg.tag_cols, tags), as_of)
+        data = rows.filter(f"ts >= {start} AND ts < {end} AND {pred}").selectExpr(
+            "ts", "payload", "ingest_seq", "row_seq"
+        )
         slots = time_spine(self.spark, start, end, cfg.resolution).selectExpr(
-            "ts", f"X'{cfg.zero_payload.hex()}' AS payload",
-            "-1L AS ingest_seq", "-1L AS row_seq",
+            "ts", *self._sentinel()
         )
         k = read_partitions(self.spark, (end - start) // cfg.resolution, n_bytes)
-        return self._lww(data.unionByName(slots).coalesce(k), "ts").orderBy("ts")
+        return self._lww(data.unionByName(slots).coalesce(k), "ts")
 
     def find(
         self,
@@ -624,6 +642,15 @@ class TimeSeriesStore:
         appear (`dbase/dbase.go:256-262`) — presence means *any* point in an
         overlapping bucket, even outside the clamped range, because the
         reference consults the bucket's index, not the slot contents.
+
+        Plan: the scanned rows (the bucket starting at ``end`` included),
+        filtered by the fixed tags and ``as_of`` and coalesced to ``k``
+        partitions as in :meth:`get`. Their distinct series go through
+        ``dense_grid`` as zero sentinels, are unioned with the rows in
+        ``[start, end)``, and ONE ``groupBy(tags, ts)`` + ``max_by`` does
+        last-write-wins and zero-fill, then ``orderBy(tags, ts)``. At
+        ``k = 1`` no exchange is planned: one job (three when it first pins
+        the hot tier, which it scans twice).
         """
         cfg = self.config
         start = cfg.floor_to_resolution(start)
@@ -632,24 +659,19 @@ class TimeSeriesStore:
             raise RangeError(f"invalid range [{start},{end}) vs now={now} (dbase.go:238-241)")
         self._check_tags(tags)
 
-        conds = [F.col(c) == v for c, v in zip(cfg.tag_cols, tags) if v not in (WILDCARD, None)]
-        if as_of is not None:
-            conds.append(F.expr(f"ingest_seq <= {int(as_of)}"))
-
-        tag_cols = list(cfg.tag_cols)
+        tag_cols = cfg.tag_cols
+        pred = self._tag_pred(
+            ((c, v) for c, v in zip(tag_cols, tags) if v not in (WILDCARD, None)), as_of
+        )
         # Presence consults every bucket the reference's loop touches —
         # including the one whose base == end (dbase.go:247,256).
-        scanned, _ = self._pruned(start, end, now, include_end_bucket=True)
-        if conds:
-            scanned = scanned.filter(functools.reduce(operator.and_, conds))
-        series = scanned.select(*tag_cols).distinct()
-        data = scanned.filter(f"ts >= {start} AND ts < {end}")
-        lww = self._lww(data, *tag_cols, "ts")
-        grid = dense_grid(series, start, end, cfg.resolution)
-        return densify(
-            grid, lww, on=[*tag_cols, "ts"], value_col="payload",
-            fill=F.lit(cfg.zero_payload),
-        ).orderBy(*tag_cols, "ts")
+        scanned, n_bytes = self._pruned(start, end, now, include_end_bucket=True)
+        k = read_partitions(self.spark, (end - start) // cfg.resolution, n_bytes)
+        scanned = scanned.filter(pred).coalesce(k)
+        data = scanned.filter(f"ts >= {start} AND ts < {end}").drop("bucket_ts")
+        series = scanned.selectExpr(*tag_cols, *self._sentinel()).distinct()
+        slots = dense_grid(series, start, end, cfg.resolution)
+        return self._lww(data.unionByName(slots).coalesce(k), *tag_cols, "ts")
 
     # --------------------------------------------------------------- retention
 

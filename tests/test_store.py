@@ -731,3 +731,143 @@ def test_tags_with_quotes_round_trip(store):
     assert {(tuple(r[t] for t in store.config.tag_cols), bytes(r["payload"])) for r in found} == {
         (tuple(odd), PA), (("it's", "b", "c", "d"), PB),
     }
+
+
+# ------------------------------------------------------------ one-job find
+
+
+def test_narrow_find_is_one_job(store):
+    """A find of at most 65,536 slots over small buckets is one partition:
+    the distinct over series, the last-write-wins aggregate and the sort
+    need no exchange, so it runs one job over cold buckets, over the pinned
+    hot tier and over a range straddling the two. The first hot read after a
+    put runs at most three: adaptive execution materializes each of its two
+    scans of the not-yet-pinned tier (rows, and series for the grid) as a
+    stage of its own before the read's one job."""
+    seeded(store)
+
+    def n_jobs(start, end, series):
+        n, rows = _jobs(store.spark, store.find(start, end, ["a", "b", "c", ""], now=NOW).collect)
+        assert [(r["tag4"], r["ts"]) for r in rows] == [
+            (s, ts) for s in series for ts in range(start, end, 10)
+        ]
+        return n
+
+    assert n_jobs(10980, 11010, "de") <= 3  # the put dropped the hot tier
+    assert n_jobs(10980, 11010, "de") == 1
+    assert n_jobs(3000, 3100, "d") == 1
+    assert n_jobs(3000, 11010, "de") == 1
+
+
+def test_narrow_find_under_small_max_partition_bytes(store):
+    """Under a 1k maxPartitionBytes a narrow find takes the distributed
+    path (exchanges, more than one job) and returns the same rows."""
+    seeded(store)
+    spark = store.spark
+    key = "spark.sql.files.maxPartitionBytes"
+
+    def read():
+        return _jobs(spark, store.find(3020, 11010, ["a", "b", "c", ""], now=NOW).collect)
+
+    _, want = read()
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        n, got = read()
+    finally:
+        spark.conf.set(key, old)
+    assert n > 1 and len(want) == 2 * 799 and got == want
+
+
+def test_wide_find_matches_model(spark, tmp_path):
+    """A find wider than 65,536 slots (resolution 1, 70,000 slots) is spread
+    over several partitions. With a wildcard in the middle position it
+    returns every matching series present in a scanned bucket — one only in
+    the bucket that starts at ``end``, so all zeros — dense, in (tags, ts)
+    order, with last-write-wins across and within batches; as of an earlier
+    batch, a series written later is absent and later overwrites are
+    invisible."""
+    cfg = StoreConfig(
+        database_name="widefind", data_path=str(tmp_path), index_depth=3,
+        payload_size=4, bucket_duration=35_000, resolution=1,
+    )
+    st = TimeSeriesStore(spark, cfg)
+    p = [bytes([i, i, i, i]) for i in range(1, 9)]
+    batches = [  # (now, [(ts, tags, payload)]) — each later write of a slot wins
+        (34_999, [
+            (10, "axc", p[0]), (30_000, "axc", p[1]), (30_000, "axc", p[2]),
+            (0, "ayc", p[5]), (100, "bxc", p[1]),
+        ]),
+        (69_999, [(40_000, "axc", p[3]), (69_999, "ayc", p[6]), (50_000, "axe", p[0])]),
+        (70_000, [(40_000, "axc", p[4]), (70_000, "azc", p[7])]),
+    ]
+    seqs = []
+    for now, rows in batches:
+        seqs.append(st.current_seq() + 1)
+        st.put_batch([(ts, *tags, pl) for ts, tags, pl in rows], now=now)
+
+    def want(as_of):
+        cur: dict[str, dict[int, bytes]] = {}
+        for seq, (_, rows) in zip(seqs, batches):
+            for ts, tags, pl in rows:
+                if seq <= as_of and tags[0] == "a" and tags[2] == "c":
+                    cur.setdefault(tags, {})
+                    if ts < 70_000:
+                        cur[tags][ts] = pl
+        return [
+            (tuple(s), ts, cur[s].get(ts, bytes(4)))
+            for s in sorted(cur) for ts in range(0, 70_000)
+        ]
+
+    for as_of in (None, seqs[1]):
+        df = st.find(0, 70_000, ["a", "", "c"], now=70_000, as_of=as_of)
+        n, rows = _jobs(spark, df.collect)
+        assert n > 1
+        got = [(tuple(r[t] for t in cfg.tag_cols), r["ts"], bytes(r["payload"])) for r in rows]
+        expected = want(seqs[-1] if as_of is None else as_of)
+        assert len({r[0] for r in expected}) == (3 if as_of is None else 2)
+        assert got == expected
+    st.close()
+
+
+def test_none_tag_matches_nothing_in_get_and_anything_in_find(store):
+    """A None or ``""`` tag in get matches no series (all-zero slots, like
+    an absent series); in find None is a wildcard, like ``""``."""
+    seeded(store)
+    for t in (None, ""):
+        assert payloads(store.get(10990, 11010, ["a", "b", t, "d"], now=NOW)) == [P0, P0]
+
+    def rows(tags):
+        return [tuple(r) for r in store.find(10990, 11010, tags, now=NOW).collect()]
+
+    wild = rows(["a", "", "c", ""])
+    assert len(wild) == 4 and rows(["a", None, "c", None]) == wild
+
+
+def test_reads_push_tag_equalities_to_the_scan(store):
+    """The parquet scan receives an ``EqualTo`` per fixed tag for get and
+    find (row-group stats skipping is this store's tag-index descent), and a
+    narrow find plans no exchange and no join."""
+    seeded(store)
+    spark = store.spark
+    key = "spark.sql.maxMetadataStringLength"  # PushedFilters print in full
+    old = spark.conf.get(key)
+    spark.conf.set(key, "100000")
+    try:
+        plans = {}
+        for verb, tags in (("get", ["a", "b", "c", "d"]), ("find", ["a", "", "c", ""])):
+            df = getattr(store, verb)(3000, 3100, tags, now=NOW)
+            df.collect()
+            plans[verb] = df._jdf.queryExecution().executedPlan().toString()
+    finally:
+        spark.conf.set(key, old)
+    for verb, tags in (("get", "abcd"), ("find", "a_c_")):
+        pushed = [
+            line.split("PushedFilters: ", 1)[1]
+            for line in plans[verb].splitlines() if "PushedFilters: " in line
+        ]
+        assert pushed, plans[verb]
+        for i, v in enumerate(tags, 1):
+            if v != "_":
+                assert all(f"EqualTo(tag{i},{v})" in p for p in pushed), plans[verb]
+    assert "Exchange" not in plans["find"] and "Join" not in plans["find"], plans["find"]
